@@ -2,7 +2,7 @@
 
 - ``entry(spark)``: flagship extraction over sf0.001 — transcripts
   synthesized deterministically from the documents table, then the
-  full per-turn pipeline (single shuffle-free mapInPandas), returning
+  full per-turn pipeline (single shuffle-free mapInArrow), returning
   one row per extracted reference.
 - ``queries()``: one entry per implemented operator from SURVEY.md §2
   plus the training-data operators (dedup/similarity/text analysis).

@@ -1,7 +1,7 @@
 """Per-turn extraction kernel: one transcript turn == one document.
 
 This is the single-node oracle AND the production kernel that runs
-inside the Spark ``mapInPandas`` stage (plans/extract.py).  Because
+inside the Spark ``mapInArrow`` stage (plans/extract.py).  Because
 every stage of the reference pipeline is page/document-local
 (pdf.rb:127-162), the whole extraction for one turn is a pure function
 of its text — embarrassingly parallel at cluster scale with zero

@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ioutil import local_frame
 from ..operators import dedup, histogram, intervals, islands
 from ..operators.fence import fence as _ckfence
 from ..operators import quality as Q
@@ -1639,7 +1640,7 @@ def f6_name_ratio(spark, sf_dir):
             ).alias("n"),
         )
     )
-    d = spark.createDataFrame(_F6_DICT, "name string, weight double")
+    d = local_frame(spark, _F6_DICT, "name string, weight double")
     joined = words.join(F.broadcast(d), words["n"] == d["name"], "left")
     agg = joined.groupBy("doc_id").agg(
         F.coalesce(F.sum("weight"), F.lit(0.0)).alias("total"),
@@ -2611,7 +2612,8 @@ def a12_kmeans_centers(spark, sf_dir):
         items, keys=["x", "y"], k=_KM_K, id_col="rid",
         max_iter=_KM_ITERS, delta=0.0,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (c["cid"], round(c["x"], 6), round(c["y"], 6), c["n"])
             for c in centers
@@ -3714,8 +3716,8 @@ def sketch_count_min(spark, sf_dir):
         F.explode(F.split(F.expr(_NORM_SPARK), " ")).alias("term")
     ).where(F.col("term") != "")
     sk = cms_build(terms, "term", depth=4, width=256)
-    probes = spark.createDataFrame(
-        [("the",), ("of",), ("data",), ("zyzzyva_absent",)], "term string"
+    probes = local_frame(
+        spark, [("the",), ("of",), ("data",), ("zyzzyva_absent",)], "term string"
     )
     return cms_point_query(sk, probes, "term", depth=4, width=256)
 
@@ -3764,8 +3766,8 @@ def sketch_bloom(spark, sf_dir):
         F.explode(F.split(F.expr(_NORM_SPARK), " ")).alias("term")
     ).where(F.col("term") != "")
     bloom = bloom_build(terms, "term", n_bits=4096, n_hashes=4)
-    probes = spark.createDataFrame(
-        [("the",), ("of",), ("data",), ("zyzzyva_absent",)], "term string"
+    probes = local_frame(
+        spark, [("the",), ("of",), ("data",), ("zyzzyva_absent",)], "term string"
     )
     return bloom_contains(bloom, probes, "term", n_bits=4096, n_hashes=4)
 

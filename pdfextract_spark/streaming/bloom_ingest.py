@@ -63,11 +63,9 @@ def _has_batch_dirs(spark, bloom_dir: str) -> bool:
     path) from a store whose committed batches all had zero
     survivors (dirs exist, no readable rows — a legitimate state the
     missing-store guard must not refuse)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(bloom_dir)
-    fs = hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+    from ..ioutil import hadoop_fs
+
+    fs, hpath = hadoop_fs(spark, bloom_dir)
     if not fs.exists(hpath):
         return False
     return any(
@@ -86,7 +84,7 @@ def _check_params(spark, bloom_dir: str, n_bits: int, n_hashes: int) -> None:
     are invisible to the bits-table read) and a mismatch raises
     instead of corrupting.  Overwritten idempotently, so a replayed
     first batch re-asserts the same row."""
-    from ..ioutil import read_parquet_or_none
+    from ..ioutil import local_frame, read_parquet_or_none
 
     path = f"{bloom_dir}/_params"
     stored = read_parquet_or_none(spark, path)
@@ -103,8 +101,8 @@ def _check_params(spark, bloom_dir: str, n_bits: int, n_hashes: int) -> None:
                     f"point at a fresh bloom_dir"
                 )
             return
-    spark.createDataFrame(
-        [(n_bits, n_hashes)], "n_bits bigint, n_hashes bigint"
+    local_frame(
+        spark, [(n_bits, n_hashes)], "n_bits bigint, n_hashes bigint"
     ).write.mode("overwrite").parquet(path)
 
 

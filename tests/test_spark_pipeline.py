@@ -565,10 +565,15 @@ def test_completed_buckets_error_classification(spark, tmp_path):
             )
 
     class _Spark:
+        # the real filesystem, which finds the lineage dir made below:
+        # a missing path is answered before any read
+        sparkContext = spark.sparkContext
+
         @property
         def read(self):
             return _Reader()
 
+    (tmp_path / "whatever" / "_lineage").mkdir(parents=True)
     with _pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
         completed_buckets(_Spark(), str(tmp_path / "whatever"))
 
@@ -650,6 +655,106 @@ def test_resume_false_truncates_lineage(spark, tmp_path):
         spark, t, out, n_buckets=4, buckets_per_batch=4, resume=False
     )
     assert l2.count() == 4  # fresh generation, not 8 stacked rows
+
+
+def test_resume_false_clears_stale_partitions(spark, tmp_path):
+    """resume=False with a smaller n_buckets: the dynamic overwrite
+    replaces only the partitions the rerun writes, so buckets 4..7 of
+    the first generation used to stay on disk, rows the new lineage
+    does not account for."""
+    from pdfextract_spark.sinks import run_extraction_job
+
+    out = str(tmp_path / "out")
+    t = make_transcripts(spark)
+    run_extraction_job(
+        spark, t, out, n_buckets=8, buckets_per_batch=8, resume=False
+    )
+    lineage = run_extraction_job(
+        spark, t, out, n_buckets=4, buckets_per_batch=4, resume=False
+    ).collect()
+    by_bucket = {
+        r["bucket"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("bucket").count().collect()
+    }
+    assert by_bucket == {
+        r["bucket"]: r["rows_out"] for r in lineage if r["rows_out"]
+    }
+    assert sum(by_bucket.values()) == len(TEXTS)
+
+
+def test_job_lineage_matches_output(spark, tmp_path):
+    """Lineage observed during the write equals the groupBy over the
+    written output, with a zero row for every scheduled bucket that got
+    no input and the sentinel rows of poisoned turns counted in
+    turns_errored under on_error='skip'."""
+    from pdfextract_spark.settings import Settings, Typesetter
+    from pdfextract_spark.sinks import run_extraction_job
+
+    out = str(tmp_path / "out")
+    # title_size=0 detonates on multi-paragraph turns only
+    poison = Settings(typesetter=Typesetter(title_size=0.0))
+    lineage = run_extraction_job(
+        spark, make_transcripts(spark), out, settings=poison,
+        n_buckets=16, buckets_per_batch=4, on_error="skip",
+    )
+    assert lineage.schema.simpleString() == (
+        "struct<bucket:int,rows_out:bigint,chars_in:bigint,"
+        "chars_truncated:bigint,regions_found:bigint,"
+        "sections_found:bigint,refs_matched:bigint,"
+        "turns_errored:bigint,n_buckets:int,committed_at:double>"
+    )
+    got = {
+        r["bucket"]: r.asDict()
+        for r in lineage.drop("committed_at").collect()
+    }
+    assert sorted(got) == list(range(16))
+
+    written = spark.read.parquet(out)
+    assert written.count() == len(TEXTS)
+    zero = {
+        "rows_out": 0, "chars_in": 0, "chars_truncated": 0,
+        "regions_found": 0, "sections_found": 0, "refs_matched": 0,
+        "turns_errored": 0,
+    }
+    want = {b: {"bucket": b, **zero, "n_buckets": 16} for b in range(16)}
+    for r in written.groupBy("bucket").agg(
+        F.count("*").alias("rows_out"),
+        F.sum("metrics.chars_in").alias("chars_in"),
+        F.sum("metrics.chars_truncated").alias("chars_truncated"),
+        F.sum("metrics.regions_found").alias("regions_found"),
+        F.sum("metrics.sections_found").alias("sections_found"),
+        F.sum("metrics.refs_matched").alias("refs_matched"),
+        F.sum(F.when(F.col("page_count") < 0, 1).otherwise(0)).alias(
+            "turns_errored"
+        ),
+    ).collect():
+        want[r["bucket"]].update(r.asDict())
+    assert got == want
+    assert sum(r["turns_errored"] for r in got.values()) > 0
+    assert 0 in {r["rows_out"] for r in got.values()}
+
+
+def test_job_runs_two_spark_jobs_per_batch(spark, tmp_path):
+    """A fresh 16-bucket job in batches of 4 runs two Spark jobs per
+    batch, the output write and the lineage append: an aggregation
+    job, a join or an inferred-schema read would exceed the count."""
+    import uuid
+
+    from pdfextract_spark.sinks import run_extraction_job
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    t = make_transcripts(spark)
+    sc.setJobGroup(group, "count the jobs of one extraction job")
+    try:
+        run_extraction_job(
+            spark, t, str(tmp_path / "out"), n_buckets=16,
+            buckets_per_batch=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 2 * 4, len(jobs)
 
 
 def test_write_table_iceberg_rejects_unsupported_modes(spark, tmp_path):
