@@ -52,10 +52,11 @@ def sf_of(sf_dir: str) -> float:
 # only honest when both sides see the same load.  The headline
 # "queries"/"duckdb_sec" fields stay min-across-windows; note min over
 # 3 windows draws stochastically lower than the min-of-2 rounds 1-4
-# recorded, so the emitted "min_of" field records N and cross-round
-# comparisons should read the per-query "bands" (samples, medians,
-# same-window ratios), not the headline min.  Scaling RATIOS use
-# time-paired rounds instead — tools/scaling.py.
+# recorded (their "min_of" field), so the window count is emitted as
+# "windows", never as "min_of", and cross-round comparisons should
+# read the per-query "bands" (samples, medians, same-window ratios),
+# not the headline min.  Scaling RATIOS use time-paired rounds
+# instead — tools/scaling.py.
 WINDOWS = int(os.environ.get("SPARK_GRAFT_BENCH_WINDOWS", "3"))
 if WINDOWS < 1:
     raise SystemExit(
@@ -284,7 +285,6 @@ def main() -> None:
         "cores": cores,
         "turns": n_turns,
         "extract_turns_per_sec": round(tps, 1),
-        "min_of": WINDOWS,
         **extras,
     }
     print(json.dumps(out))

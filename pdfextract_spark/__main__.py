@@ -23,6 +23,7 @@ import dataclasses
 import sys
 
 from .settings import DEFAULT, Settings
+from .worker import settle_worker
 
 ARTIFACTS = (
     "regions", "zones", "columns", "sections", "titles", "references",
@@ -100,6 +101,7 @@ def extract_bib(args) -> None:
     resolved = resolve_references(refs, catalog, min_score=args.min_score)
 
     def to_bib(batches):
+        settle_worker()
         import pandas as pd
 
         for pdf in batches:
@@ -139,6 +141,7 @@ def mark(args) -> None:
     ts = settings.typesetter
 
     def to_masks(batches):
+        settle_worker()
         import pandas as pd
 
         for pdf in batches:
@@ -274,6 +277,7 @@ def main(argv: list[str] | None = None) -> None:
         xml_outline = args.outline
 
         def to_xml(batches):
+            settle_worker()
             import pandas as pd
 
             for pdf in batches:

@@ -183,6 +183,25 @@ def minhash_bands(
     return bands
 
 
+def _oversized_buckets(
+    sizes: DataFrame, max_bucket_size: int
+) -> tuple[DataFrame, DataFrame]:
+    """(band, band_hash, _bsz) bucket sizes -> (the buckets holding
+    more than ``max_bucket_size`` docs, a one-row (n, mx, avoided)
+    summary of them).  ``avoided`` sums each bucket's B*(B-1)/2 pairs
+    in bigint arithmetic, exact where a double is not (past ~1e8 docs
+    per bucket).  It is an upper bound on the pairs the cap removes:
+    a pair in a dropped bucket can still be generated through another
+    band, and is then counted here but not avoided."""
+    over = sizes.where(F.col("_bsz") > max_bucket_size)
+    summary = over.agg(
+        F.count("*").alias("n"),
+        F.max("_bsz").alias("mx"),
+        F.sum(F.expr("_bsz * (_bsz - 1) DIV 2")).alias("avoided"),
+    )
+    return over, summary
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -206,8 +225,9 @@ def lsh_candidate_pairs(
     join, a ``UserWarning`` reports how many buckets were dropped
     (with the largest size and the pair count avoided), and the same
     numbers land in ``stats`` under ``lsh_oversized_buckets`` /
-    ``lsh_max_bucket_size_seen`` / ``lsh_pairs_avoided``.  Docs in a
-    dropped bucket can still pair through their OTHER bands, so this
+    ``lsh_max_bucket_size_seen`` / ``lsh_pairs_avoided`` (an upper
+    bound, see ``_oversized_buckets``).  Docs in a dropped bucket can
+    still pair through their OTHER bands, so this
     trades bounded recall loss on pathological buckets for a hard
     O(max_bucket_size^2)-per-bucket work bound — the knob a 100-TB
     run sets after ``lsh_star_edges``'s ``bucket_size`` diagnostic
@@ -243,14 +263,8 @@ def lsh_candidate_pairs(
         sizes = bands.groupBy("band", "band_hash").agg(
             F.count("*").alias("_bsz")
         )
-        over = sizes.where(F.col("_bsz") > max_bucket_size)
-        row = over.agg(
-            F.count("*").alias("n"),
-            F.max("_bsz").alias("mx"),
-            F.sum(F.col("_bsz") * (F.col("_bsz") - 1) / 2)
-            .cast("bigint")
-            .alias("avoided"),
-        ).collect()[0]
+        over, summary = _oversized_buckets(sizes, max_bucket_size)
+        row = summary.collect()[0]
         if stats is not None:
             stats["lsh_oversized_buckets"] = int(row["n"])
             stats["lsh_max_bucket_size_seen"] = (

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import settle_worker
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -144,6 +146,7 @@ def media_features(
         )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker()
         for pdf in batches:
             feats = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -217,6 +220,7 @@ def sample_frames(
         raise ValueError(f"every_ms must be > 0, got {every_ms}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker()
         for pdf in batches:
             mids: list[int] = []
             idxs: list[int] = []
@@ -277,6 +281,7 @@ def resize_media(
         raise ValueError(f"output dims must be > 0, got {out_w}x{out_h}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker()
         n_out = out_w * out_h
         for pdf in batches:
             feats = []

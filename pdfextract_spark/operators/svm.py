@@ -27,6 +27,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import settle_worker
+
 
 def parse_libsvm_model(text: str, n_features: int | None = None) -> dict:
     """Parse the libsvm text model format into
@@ -144,6 +146,7 @@ def svm_decision(
     passthrough = df.columns
 
     def run(batches):
+        settle_worker()
         for pdf in batches:
             x = pdf[feature_cols].to_numpy(dtype=np.float64)
             # ||x - sv||^2 via the expansion; one BLAS matmul per batch

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 from ..core import extract_turn, render_turn  # noqa: F401 (render_turn: oracle path)
 from ..core.language import transliterate
 from ..settings import DEFAULT, Settings
+from ..worker import settle_worker
 
 _D = DoubleType()
 _I = IntegerType()
@@ -352,6 +353,7 @@ def extract(
         per-turn kernel, emit typed RecordBatches directly.  Bypassing
         the pandas object path cuts serialization from ~10x kernel cost
         to a small constant (pa.array over python structs is C-side)."""
+        settle_worker()
         if rendered:
             def rnd(v):
                 return None if v is None else round(v, precision)

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 from ..core import extract_turn
 from ..core.maskview import render_turn_masks
 from ..settings import DEFAULT, Settings
+from ..worker import settle_worker
 
 MASK_SCHEMA = StructType(
     [
@@ -85,6 +86,7 @@ def extract_masks(
         )
 
     def run(batches):
+        settle_worker()
         for batch in batches:
             pdf = batch.to_pydict()
             cols: dict[str, list] = {f.name: [] for f in arrow_schema}

@@ -27,6 +27,7 @@ _NAMES = [n for n, amb in NAME_ROWS if not amb]
 
 # the single schema authority lives in tables.py — a local copy here
 # would silently drift when the DDL changes
+from ..worker import settle_worker
 from .tables import TRANSCRIPT_DDL as _OUT_SCHEMA
 
 
@@ -142,6 +143,7 @@ def synth_transcripts(
     )
 
     def gen(batches):
+        settle_worker()
         for pdf in batches:
             # the transcript contract types turn_idx as int (32-bit);
             # numpy astype('int32') would WRAP silently past 2^31,

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..worker import settle_worker
+
 SESSION_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -86,6 +88,7 @@ def _close_sessions(gap_ms: int, tz: str):
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        settle_worker()
         (conv_id,) = key
         if state.hasTimedOut:
             turns, chars, last_ms = state.get

@@ -1351,6 +1351,22 @@ def test_lsh_max_bucket_size_caps_distinct_text_mega_bucket(spark):
     assert capped < stats["lsh_pairs_avoided"]
 
 
+def test_lsh_pairs_avoided_is_exact_past_double_precision(spark):
+    """The oversized-bucket summary counts B*(B-1)/2 pairs in bigint:
+    for B = 134217731 the exact count is 9007199590285315, while a
+    double-precision sum rounds it to ...316.  Buckets at or under the
+    cap are not counted."""
+    sizes = spark.createDataFrame(
+        [(0, "mega", 134217731), (1, "small", 100)],
+        "band int, band_hash string, _bsz bigint",
+    )
+    over, summary = dedup._oversized_buckets(sizes, 100)
+    row = summary.collect()[0]
+    assert (row["n"], row["mx"]) == (1, 134217731)
+    assert row["avoided"] == 9007199590285315
+    assert [r["band_hash"] for r in over.collect()] == ["mega"]
+
+
 def test_near_dup_dedup_max_bucket_size_keeps_output_shape(spark):
     """The cap threads through near_dup_dedup: with a tiny cap on a
     perturbed-boilerplate corpus the pipeline still returns exactly
