@@ -43,8 +43,8 @@ def sf_of(sf_dir: str) -> float:
 
 
 # Pinned bench protocol: the suite below plus the two extraction rows
-# is the FIXED 18-query manifest recorded in every BENCH_r{N}.json —
-# hold it stable so rounds compare query-by-query.
+# is the manifest recorded in every BENCH_r{N}.json — only append to
+# it, so rounds compare query-by-query.
 # Round 5 on: the suite runs in WINDOWS separate passes, each window
 # timing every Spark query and then IMMEDIATELY its DuckDB oracle, so
 # each query gets a (spark, duck) pair sampled seconds apart — the
@@ -63,7 +63,8 @@ if WINDOWS < 1:
         f"SPARK_GRAFT_BENCH_WINDOWS={WINDOWS}: need >= 1 timing window"
     )
 
-# Headline operator queries benched besides the flagship extraction.
+# Operator queries benched besides the flagship extraction, in the
+# order their timings are emitted.
 BENCH_QUERIES = [
     "a2_islands_sessionize",
     "a3_overlap_merge",
@@ -81,14 +82,6 @@ BENCH_QUERIES = [
     "token_count_bpe",
     "fingerprint_minshingle",
     "ann_cosine_topk",
-]
-
-# Round-3 manifest extension: the round-2 operators the pinned 18-query
-# suite predated.  Kept as a SEPARATE list so the original manifest
-# still compares round-over-round query-by-query; each of these also
-# gets a DuckDB denominator (its own oracle on the same parquet) in
-# the "duckdb_sec" record.
-BENCH_QUERIES_R3 = [
     "j6_asof_join",
     "dedup_paragraph_exact",
     "dedup_duplicate_clusters",
@@ -96,26 +89,12 @@ BENCH_QUERIES_R3 = [
     "sketch_count_min",
     "a12_kmeans_centers",
     "a13_svm_reference_score",
-]
-
-# Round-4 manifest extension: the composed mega-bucket-safe near-dup
-# pipeline (exact collapse -> LSH+Jaccard over canonicals -> connected
-# components -> re-attach), new driver query this round.
-BENCH_QUERIES_R4 = [
     "near_dup_dedup",
     "dedup_substring_stats",
-]
-
-# Round-5 manifest extension: dedup_substring_stats at an 8x-mirrored
-# corpus (min_count scaled 2 -> 16, identical duplicated-gram set).
-# The base entry's 5,000-doc input is fixed-overhead-dominated at
-# sf0.1 (BASELINE.md profiles ~0.7 s real work under ~2.4 s wall);
-# this entry measures the same operator where the work amortizes the
-# per-job floor — the regime a 100 TB run actually lives in.
-# NOTE: like the R3/R4 extensions, this adds its wall time (~6-12 s at
-# sf0.1) to the headline "value"; cross-round headline comparisons
-# must subtract the extension or compare per-query via "bands".
-BENCH_QUERIES_R5 = [
+    # the same operator on an 8x-mirrored corpus (min_count 2 -> 16,
+    # identical duplicated-gram set): the base entry's 5,000-doc input
+    # is fixed-overhead-dominated at sf0.1, this one measures the
+    # amortized regime a large run lives in
     "dedup_substring_stats_8x",
 ]
 
@@ -216,20 +195,14 @@ def main() -> None:
                 f"'{sf_dir}/{tname}.parquet'"
             )
 
-        names = (
-            BENCH_QUERIES
-            + BENCH_QUERIES_R3
-            + BENCH_QUERIES_R4
-            + BENCH_QUERIES_R5
-        )
-        spark_w: dict[str, list[float]] = {n: [] for n in names}
-        duck_w: dict[str, list[float]] = {n: [] for n in names}
+        spark_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
+        duck_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
         for _w in range(WINDOWS):
             # each query's DuckDB oracle runs IMMEDIATELY after its
             # Spark run — the two sides of a ratio are seconds apart,
             # not separated by a whole suite pass on a host whose load
             # swings 2-5x within a minute
-            for name in names:
+            for name in BENCH_QUERIES:
                 with fence_scope():
                     t0 = time.time()
                     QUERIES[name](spark, sf_dir).write.format("noop").mode(
@@ -241,7 +214,7 @@ def main() -> None:
                 duck_w[name].append(time.time() - t0)
 
         bands = {}
-        for name in names:
+        for name in BENCH_QUERIES:
             sw, dw = spark_w[name], duck_w[name]
             ratios = [s / d for s, d in zip(sw, dw)]
             queries[name] = round(min(sw), 3)
@@ -263,7 +236,7 @@ def main() -> None:
         # min-across-windows denominators keep the field shape earlier
         # rounds recorded; the same-window pairing lives in "bands"
         extras["duckdb_sec"] = {
-            name: round(min(duck_w[name]), 3) for name in names
+            name: round(min(duck_w[name]), 3) for name in BENCH_QUERIES
         }
         # j1_spark_over_duckdb keeps its rounds-1-4 min/min semantics
         # (queries[j1] / j1_duckdb_sec reproduces it) so cross-round

@@ -130,43 +130,14 @@ def mark(args) -> None:
     """Per-page SVG layout masks (bin/pdf-extract 'mark' analog)."""
     import sys as _sys
 
+    from .plans.masks import extract_masks
+
     settings = apply_overrides(DEFAULT, args.overrides)
     types = tuple(t for t in args.types.split(",") if t)
     spark = _session(args, "pdfextract-spark-mark")
     transcripts = _load_transcripts(spark, args)
-
-    from .core import extract_turn
-    from .core.maskview import render_turn_masks
-
-    ts = settings.typesetter
-
-    def to_masks(batches):
-        settle_worker()
-        import pandas as pd
-
-        for pdf in batches:
-            conv, turn, page, svg = [], [], [], []
-            for cid, tid, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                res = extract_turn(text or "", settings, want=types)
-                for p, doc in render_turn_masks(
-                    res,
-                    page_width=ts.page_width,
-                    page_height=ts.page_height,
-                    types=types,
-                ).items():
-                    conv.append(cid)
-                    turn.append(int(tid))
-                    page.append(int(p))
-                    svg.append(doc)
-            yield pd.DataFrame(
-                {"conv_id": conv, "turn_idx": pd.Series(turn, dtype="int32"),
-                 "page": pd.Series(page, dtype="int32"), "svg": svg}
-            )
-
-    out = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        to_masks, schema="conv_id string, turn_idx int, page int, svg string"
+    out = extract_masks(transcripts, settings, types=types).select(
+        "conv_id", "turn_idx", "page", "svg"
     )
     out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()

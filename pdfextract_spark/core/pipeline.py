@@ -150,8 +150,10 @@ def extract_turn(
 def render_turn(result: dict, settings: Settings = DEFAULT) -> dict:
     """Canonical sink rendering (SURVEY.md S5): numeric rounding to
     ``settings.precision`` (xml_view.rb:24-29) and transliteration of
-    content (xml_view.rb:92-94, language.rb:5-38).  Used for golden
-    fixtures and the output table."""
+    content (xml_view.rb:92-94, language.rb:5-38).  The reference
+    renderer that goldens, tests and the benchmark check compare
+    against; the Spark plan renders from its own schema
+    (plans/extract.py) and must agree with it."""
     p = settings.precision
 
     def rnd(v):

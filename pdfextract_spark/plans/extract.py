@@ -30,8 +30,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import extract_turn, render_turn  # noqa: F401 (render_turn: oracle path)
+from ..core import extract_turn
 from ..core.language import transliterate
+from ..core.spatial import get_text_content
 from ..settings import DEFAULT, Settings
 from ..worker import settle_worker
 
@@ -99,15 +100,7 @@ ZONE_T = StructType(
     ]
 )
 
-COLUMN_T = StructType(
-    [
-        StructField("x", _D),
-        StructField("y", _D),
-        StructField("width", _D),
-        StructField("height", _D),
-        StructField("page", _I),
-    ]
-)
+COLUMN_T = COMPONENT_T  # same shape: a box on a page
 
 TITLE_T = StructType(
     [
@@ -177,79 +170,65 @@ RESULT_SCHEMA = StructType(
 )
 
 
-def _ident(v):
-    return v
+def _renderer(dtype, rnd, name=None):
+    """The sink transform (xml_view.rb:24-29, 92-94) for a value of
+    Spark type ``dtype``: ``rnd`` every double, transliterate every
+    string field named ``content``, recurse into arrays and structs,
+    copy anything else.  ``None`` when nothing under ``dtype`` changes,
+    so untouched subtrees are copied without a walk."""
+    if isinstance(dtype, DoubleType):
+        return rnd
+    if isinstance(dtype, StringType):
+        return transliterate if name == "content" else None
+    if isinstance(dtype, ArrayType):
+        elem = _renderer(dtype.elementType, rnd)
+        if elem is None:
+            return None
+        return lambda xs: None if xs is None else [elem(x) for x in xs]
+    if isinstance(dtype, StructType):
+        changed = [
+            (f.name, fn)
+            for f in dtype.fields
+            if (fn := _renderer(f.dataType, rnd, f.name)) is not None
+        ]
+        if not changed:
+            return None
+
+        def render(d):
+            if d is None:
+                return None
+            out = dict(d)
+            for k, fn in changed:
+                out[k] = fn(out.get(k))
+            return out
+
+        return render
+    return None
 
 
-def _region_row(r: dict, rnd=_ident, tx=_ident) -> dict:
-    """Schema-aware render: rounding (xml_view.rb:24-29) and content
-    transliteration (xml_view.rb:92-94) applied per known field — much
-    cheaper than a generic deep walk at millions of turns."""
-    return {
-        "x": rnd(r["x"]),
-        "y": rnd(r["y"]),
-        "width": rnd(r["width"]),
-        "height": rnd(r["height"]),
-        "line_height": rnd(r["line_height"]),
-        "font": r["font"],
-        "page": r["page"],
-        "lines": [
-            {
-                "content": tx(l["content"]),
-                "x_offset": rnd(l["x_offset"]),
-                "y_offset": rnd(l["y_offset"]),
-                "spacing": rnd(l["spacing"]),
-            }
-            for l in r.get("lines", [])
-        ],
-    }
+def _chunks_view(res: dict) -> list:
+    ch = res.get("chunks") or {}
+    return [c for pg in sorted(ch) for c in ch[pg]]
 
 
-def _section_row(s: dict, content: str, rnd=_ident, tx=_ident) -> dict:
-    return {
-        "content": tx(content),
-        "letter_ratio": rnd(s["letter_ratio"]),
-        "year_ratio": rnd(s["year_ratio"]),
-        "cap_ratio": rnd(s["cap_ratio"]),
-        "name_ratio": rnd(s["name_ratio"]),
-        "word_count": s["word_count"],
-        "lateness": rnd(s["lateness"]),
-        "reference_score": rnd(s["reference_score"]),
-        "line_height": rnd(s.get("line_height")),
-        "font": s.get("font"),
-        "lines": [
-            {
-                "content": tx(l["content"]),
-                "x_offset": rnd(l["x_offset"]),
-                "y_offset": rnd(l["y_offset"]),
-                "spacing": rnd(l["spacing"]),
-            }
-            for l in s.get("lines", [])
-        ],
-        "components": [
-            {
-                "x": rnd(c["x"]),
-                "y": rnd(c["y"]),
-                "width": rnd(c["width"]),
-                "height": rnd(c["height"]),
-                "page": c["page"],
-            }
-            for c in s.get("components", [])
-        ],
-    }
+def _margins_view(res: dict) -> list:
+    mp = res.get("margins") or {}
+    return [dict(m, side=side) for pg in sorted(mp) for side, m in mp[pg].items()]
 
 
-def _chunk_row(c: dict, rnd=_ident, tx=_ident) -> dict:
-    return {
-        "x": rnd(c["x"]),
-        "y": rnd(c["y"]),
-        "width": rnd(c["width"]),
-        "height": rnd(c["height"]),
-        "line_height": rnd(c["line_height"]),
-        "content": tx(c["content"]),
-        "font": c["font"],
-        "page": c["page"],
-    }
+# Where a kernel result's shape differs from its RESULT_SCHEMA field;
+# every other artifact is the kernel's list as is.  Views keep the
+# kernel's extra keys (page_width, group, ...): pa.array reads struct
+# fields by name and ignores the rest.
+_VIEWS = {
+    "title": lambda res: res.get("title"),
+    "zones": lambda res: [dict(z, zone=z["group"]) for z in res.get("zones") or []],
+    "sections": lambda res: [
+        dict(s, content=get_text_content(s)) for s in res.get("sections") or []
+    ],
+    "chunks": _chunks_view,
+    "margins": _margins_view,
+}
 
 
 # DEFAULT_ARTIFACTS is what extract() emits when ``want`` is omitted
@@ -272,9 +251,10 @@ def extract(
     """transcripts(conv_id, turn_idx, role, text, ...) -> one result row
     per turn with nested extraction artifacts.
 
-    ``rendered=True`` applies the canonical sink transform (2-dp
-    rounding + transliteration, xml_view.rb:24-29/92-94) so outputs
-    are fixture-comparable.
+    ``rendered=True`` applies the canonical sink transform so outputs
+    are fixture-comparable: every double in RESULT_SCHEMA is rounded to
+    ``settings.precision`` and every ``content`` string transliterated
+    (xml_view.rb:24-29/92-94).
 
     ``want`` projects the OUTPUT to a subset of artifact columns
     (SURVEY.md S8, the reference's explicit-only rendering): the
@@ -297,8 +277,6 @@ def extract(
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    from ..core.spatial import get_text_content
-
     selected = DEFAULT_ARTIFACTS if want is None else tuple(want)
     unknown = [w for w in selected if w not in ARTIFACT_FIELDS]
     if unknown:
@@ -308,13 +286,8 @@ def extract(
             f"'titles' for 'title') would otherwise silently return "
             f"rows with the artifact missing"
         )
-    computed = StructType(
-        [
-            f
-            for f in RESULT_SCHEMA.fields
-            if f.name not in ARTIFACT_FIELDS or f.name in selected
-        ]
-    )
+    dropped = set(ARTIFACT_FIELDS) - set(selected)
+    computed = StructType([f for f in RESULT_SCHEMA if f.name not in dropped])
     # reject carries colliding with OUTPUT fields, and also with the
     # base INPUT selection below — carry=("text",) would otherwise put
     # a duplicate 'text' column into src.select and the stage would
@@ -354,16 +327,20 @@ def extract(
         the pandas object path cuts serialization from ~10x kernel cost
         to a small constant (pa.array over python structs is C-side)."""
         settle_worker()
-        if rendered:
-            def rnd(v):
-                return None if v is None else round(v, precision)
 
-            tx = transliterate
-        else:
-            rnd = tx = _ident
-        kernel_want = tuple(
-            {"title": "titles"}.get(k, k) for k in selected
-        )
+        def rnd(v):
+            return None if v is None else round(v, precision)
+
+        views = [
+            (name, _VIEWS.get(name, lambda res, name=name: res.get(name) or []))
+            for name in selected
+        ]
+        renderers = [
+            (f.name, render)
+            for f in (computed.fields if rendered else ())
+            if (render := _renderer(f.dataType, rnd, f.name)) is not None
+        ]
+        kernel_want = tuple({"title": "titles"}.get(k, k) for k in selected)
         for batch in batches:
             # convert ONLY the four kernel inputs to Python objects:
             # carry columns are copied verbatim from the Arrow batch
@@ -375,8 +352,8 @@ def extract(
                 for c in ("conv_id", "turn_idx", "role", "text")
             }
             # column-wise accumulation: one Python list per output
-            # field, converted once by pa.array — avoids building a
-            # per-turn row dict plus a second all-rows pass per field
+            # field, rendered and converted once per batch — no
+            # per-turn row dict to transpose afterwards
             cols: dict[str, list] = {f.name: [] for f in computed_arrow}
             for conv_id, turn_idx, role, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"]
@@ -410,95 +387,14 @@ def extract(
                         f"clean the input or pass on_error='skip'"
                     )
                 cols["conv_id"].append(conv_id)
-                cols["turn_idx"].append(
-                    None if turn_idx is None else int(turn_idx)
-                )
+                cols["turn_idx"].append(None if turn_idx is None else int(turn_idx))
                 cols["role"].append(role)
                 cols["page_count"].append(res["page_count"])
                 cols["metrics"].append(res["metrics"])
-                if "title" in selected:
-                    title = res.get("title")
-                    if title is not None:
-                        title = {
-                            "content": tx(title["content"]),
-                            "line_height": rnd(title["line_height"]),
-                            "font": title["font"],
-                        }
-                    cols["title"].append(title)
-                if "regions" in selected:
-                    cols["regions"].append(
-                        [_region_row(r, rnd, tx) for r in res.get("regions") or []]
-                    )
-                if "zones" in selected:
-                    cols["zones"].append(
-                        [
-                            {
-                                "zone": z["group"],
-                                "x": rnd(z["x"]),
-                                "y": rnd(z["y"]),
-                                "width": rnd(z["width"]),
-                                "height": rnd(z["height"]),
-                                "page": z["page"],
-                            }
-                            for z in res.get("zones") or []
-                        ]
-                    )
-                if "columns" in selected:
-                    cols["columns"].append(
-                        [
-                            {
-                                "x": rnd(c["x"]),
-                                "y": rnd(c["y"]),
-                                "width": rnd(c["width"]),
-                                "height": rnd(c["height"]),
-                                "page": c["page"],
-                            }
-                            for c in res.get("columns") or []
-                        ]
-                    )
-                if "sections" in selected:
-                    cols["sections"].append(
-                        [
-                            _section_row(s, get_text_content(s), rnd, tx)
-                            for s in res.get("sections") or []
-                        ]
-                    )
-                if "references" in selected:
-                    cols["references"].append(
-                        [
-                            {"content": tx(r["content"]), "order": r.get("order")}
-                            for r in res.get("references") or []
-                        ]
-                    )
-                if "characters" in selected:
-                    cols["characters"].append(
-                        [_chunk_row(c, rnd, tx) for c in res.get("characters") or []]
-                    )
-                if "chunks" in selected:
-                    ch = res.get("chunks") or {}
-                    cols["chunks"].append(
-                        [
-                            _chunk_row(c, rnd, tx)
-                            for pg in sorted(ch)
-                            for c in ch[pg]
-                        ]
-                    )
-                if "margins" in selected:
-                    mp = res.get("margins") or {}
-                    cols["margins"].append(
-                        [
-                            {
-                                "side": side,
-                                "x": rnd(m["x"]),
-                                "y": rnd(m["y"]),
-                                "width": rnd(m["width"]),
-                                "height": rnd(m["height"]),
-                                "page": m["page"],
-                            }
-                            for pg in sorted(mp)
-                            for side, m in mp[pg].items()
-                        ]
-                    )
+                for name, view in views:
+                    cols[name].append(view(res))
+            for name, render in renderers:
+                cols[name] = [render(v) for v in cols[name]]
             arrays = [
                 pa.array(cols[field.name], type=field.type)
                 for field in computed_arrow

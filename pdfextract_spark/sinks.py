@@ -253,99 +253,3 @@ def conv_metrics_rollup(result: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.sum("chars_in").alias("chars_in"),
         F.sum("refs_matched").alias("refs_matched"),
     )
-
-
-def write_table(
-    df: DataFrame,
-    target: str,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-    storage: str = "auto",
-) -> str:
-    """Storage-dispatching sink: Iceberg ``writeTo`` when ``target`` is
-    a catalog identifier (``catalog.db.table``) and an Iceberg catalog
-    is on the classpath, parquet path otherwise.  Keeps every plan
-    upstream identical — the north_rule's Iceberg story concretely:
-    swapping storage is this one function.  Returns 'iceberg' or
-    'parquet' for the path taken.
-
-    Dispatch is explicit-first: ``storage='iceberg'`` / ``'parquet'``
-    forces the branch, as does an ``iceberg:`` target prefix.  In
-    ``'auto'`` mode a slash-free dotted string is an Iceberg
-    identifier *unless* it ends in a file extension (``.parquet`` /
-    ``.pq``), so a relative path like ``'out.parquet'`` writes parquet
-    instead of erroring on a missing catalog."""
-    if storage not in ("auto", "iceberg", "parquet"):
-        raise ValueError(f"storage must be auto|iceberg|parquet, got {storage!r}")
-    if target.startswith("iceberg:"):
-        if storage == "parquet":
-            raise ValueError(
-                f"contradictory dispatch: target {target!r} has an "
-                f"'iceberg:' prefix but storage='parquet' was passed"
-            )
-        target = target[len("iceberg:"):]
-        storage = "iceberg"
-    if storage == "auto":
-        file_like = target.rsplit(".", 1)[-1].lower() in ("parquet", "pq")
-        storage = (
-            "iceberg"
-            if "/" not in target and target.count(".") >= 1 and not file_like
-            else "parquet"
-        )
-    if storage == "iceberg":
-        # writeTo has no analogue for 'ignore'/'errorifexists' — map
-        # only the two supported modes and refuse the rest instead of
-        # silently appending to a table the caller asked to leave
-        # untouched (or to fail on)
-        if mode not in ("overwrite", "append"):
-            raise ValueError(
-                f"mode {mode!r} is not supported on the Iceberg "
-                f"branch (only 'overwrite'/'append'); the parquet "
-                f"branch honors {mode!r} — pass storage='parquet'"
-            )
-        try:
-            w = df.writeTo(target)
-            if partition_by:
-                from pyspark.sql.functions import col as _col
-
-                w = w.partitionedBy(*[_col(c) for c in partition_by])
-            if mode == "overwrite":
-                w.createOrReplace()
-            else:
-                w.append()
-            return "iceberg"
-        except Exception as exc:  # no catalog / no iceberg jars
-            raise RuntimeError(
-                f"writeTo({target!r}) failed — is an Iceberg catalog "
-                f"configured? Underlying error: {exc}"
-            ) from exc
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(target)
-    return "parquet"
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Persist as a Hive-bucketed table: rows are hash-distributed into
-    ``n_buckets`` files per partition BY THE WRITER, so later joins or
-    aggregations on ``bucket_cols`` between tables bucketed the same
-    way need NO exchange — the co-located-join layout for tables that
-    are joined repeatedly (e.g. transcripts x resolved references on
-    conv_id).  Bucketing metadata lives in the session catalog, hence
-    ``saveAsTable`` (plain ``.parquet(path)`` cannot carry it); on a
-    cluster the same call writes through the shared metastore/Iceberg
-    catalog.  ``sort_cols`` additionally sorts within each bucket so a
-    sort-merge join skips its sort as well."""
-    w = df.write.format(fmt).mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)

@@ -63,6 +63,45 @@ def test_extract_masks_fingerprint_only_and_types(spark):
         extract_masks(make_transcripts(spark), types=("bogus",))
 
 
+def test_cli_mark_writes_the_mask_plan(spark, tmp_path, monkeypatch):
+    """`python -m pdfextract_spark mark` writes one (conv_id, turn_idx,
+    page, svg) row per page, equal to the kernel's mask renderer, and
+    refuses unknown --types instead of writing empty masks."""
+    from pdfextract_spark.__main__ import main
+    from pdfextract_spark.core import extract_turn
+    from pdfextract_spark.core.maskview import render_turn_masks
+    from pdfextract_spark.settings import DEFAULT
+
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    make_transcripts(spark).write.parquet(src)
+    argv = ["mark", "--input", src, "--output", out, "--master", "local[1]"]
+    types = ("regions", "columns")
+    # mark() ends by stopping the session it got: keep the shared one
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    try:
+        main(argv + ["--types", ",".join(types)])
+        with pytest.raises(ValueError, match="unknown mask types"):
+            main(argv + ["--types", "regions,bogus"])
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+
+    written = spark.read.parquet(out)
+    assert written.columns == ["conv_id", "turn_idx", "page", "svg"]
+    got = {(r["turn_idx"], r["page"]): r["svg"] for r in written.collect()}
+    ts = DEFAULT.typesetter
+    expected = {
+        (i, page): svg
+        for i, text in enumerate(TEXTS)
+        for page, svg in render_turn_masks(
+            extract_turn(text, want=types),
+            page_width=ts.page_width,
+            page_height=ts.page_height,
+            types=types,
+        ).items()
+    }
+    assert expected and got == expected
+
+
 def test_font_metrics_match_afm_table(spark):
     """S3: the per-font min/max glyph advance from the Spark rollup
     equals milli-em units x size / 1000 (2 dp) from the engine's

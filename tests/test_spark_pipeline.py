@@ -66,6 +66,75 @@ def test_extract_matches_kernel_goldens(spark):
             assert reg["x"] == round(reg["x"], 2)
 
 
+def _project(value, dtype):
+    """``value`` cut down to the fields of Spark type ``dtype``."""
+    from pyspark.sql.types import ArrayType, StructType
+
+    if value is None:
+        return None
+    if isinstance(dtype, ArrayType):
+        return [_project(v, dtype.elementType) for v in value]
+    if isinstance(dtype, StructType):
+        return {f.name: _project(value.get(f.name), f.dataType) for f in dtype}
+    return value
+
+
+def test_extract_every_artifact_matches_render_turn(spark):
+    """Every field of every artifact equals the single-node kernel:
+    rendered through render_turn at precision 2 and 4, raw with
+    rendered=False.  The kernel's page-keyed chunks/margins are
+    flattened in page order, zones carry ``group`` as ``zone`` and a
+    section's content is the (transliterated) text of the raw
+    section."""
+    import dataclasses
+
+    from pdfextract_spark.core import extract_turn, render_turn
+    from pdfextract_spark.core.language import transliterate
+    from pdfextract_spark.core.spatial import get_text_content
+    from pdfextract_spark.plans.extract import (
+        ARTIFACT_FIELDS,
+        RESULT_SCHEMA,
+        extract,
+    )
+    from pdfextract_spark.settings import DEFAULT
+
+    kernel_want = tuple({"title": "titles"}.get(a, a) for a in ARTIFACT_FIELDS)
+    df = make_transcripts(spark)
+    for precision, rendered in ((2, True), (4, True), (2, False)):
+        settings = dataclasses.replace(DEFAULT, precision=precision)
+        out = extract(df, settings, rendered=rendered, want=ARTIFACT_FIELDS)
+        rows = {r["turn_idx"]: r.asDict(recursive=True) for r in out.collect()}
+        assert len(rows) == len(TEXTS)
+        for i, text in enumerate(TEXTS):
+            raw = extract_turn(text, settings, want=kernel_want)
+            res = render_turn(raw, settings) if rendered else raw
+            tx = transliterate if rendered else str
+            chunks, margins = res["chunks"], res["margins"]
+            expected = {
+                "page_count": res["page_count"],
+                "metrics": res["metrics"],
+                "title": res["title"],
+                "regions": res["regions"],
+                "zones": [dict(z, zone=z["group"]) for z in res["zones"]],
+                "columns": res["columns"],
+                "sections": [
+                    dict(s, content=tx(get_text_content(r)))
+                    for s, r in zip(res["sections"], raw["sections"])
+                ],
+                "references": res["references"],
+                "characters": res["characters"],
+                "chunks": [c for pg in sorted(chunks) for c in chunks[pg]],
+                "margins": [
+                    dict(m, side=side)
+                    for pg in sorted(margins)
+                    for side, m in margins[pg].items()
+                ],
+            }
+            for name, value in expected.items():
+                want = _project(value, RESULT_SCHEMA[name].dataType)
+                assert rows[i][name] == want, (precision, rendered, i, name)
+
+
 def test_extract_ligature_transliteration(spark):
     from pdfextract_spark.plans import extract
 
@@ -326,37 +395,6 @@ def test_read_transcripts_all_formats_equal(spark, tmp_path):
         read_transcripts(spark, "/tmp/x", format="avro")
 
 
-def test_write_table_iceberg_branch(spark, tmp_path):
-    """Exercises the writeTo branch for real when Iceberg jars are on
-    the classpath (skipped otherwise — this container ships none):
-    round-trips rows through a hadoop-type catalog table, proving the
-    Iceberg story does not silently rot when jars ARE present."""
-    import pytest as _pytest
-
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-    except Exception:
-        _pytest.skip("iceberg runtime jars not on the classpath")
-    spark.conf.set(
-        "spark.sql.catalog.it_wt", "org.apache.iceberg.spark.SparkCatalog"
-    )
-    spark.conf.set("spark.sql.catalog.it_wt.type", "hadoop")
-    spark.conf.set("spark.sql.catalog.it_wt.warehouse", str(tmp_path / "wh"))
-
-    from pdfextract_spark.sinks import write_table
-
-    df = spark.range(5).selectExpr("id", "id % 2 as b")
-    assert (
-        write_table(df, "it_wt.db.t", mode="overwrite", partition_by=["b"])
-        == "iceberg"
-    )
-    assert spark.read.table("it_wt.db.t").count() == 5
-    assert write_table(df, "it_wt.db.t", mode="append") == "iceberg"
-    assert spark.read.table("it_wt.db.t").count() == 10
-
-
 def test_mega_turn_skew_guard(spark):
     """max_turn_chars bounds the per-turn kernel cost: a pathological
     multi-MB turn is truncated at the cap with the cut recorded in
@@ -431,76 +469,6 @@ def test_pipeline_goldens_current(spark):
             "pipeline_font_metrics pipeline_page_dims pipeline_masks"
         ).split():
             assert os.path.exists(f"{root}/goldens/pipeline/{sf}/{name}.parquet")
-
-
-def test_write_table_dispatch(spark, tmp_path):
-    """Storage dispatch: parquet for paths (partitioned, readable
-    round-trip); catalog identifiers raise a clear error when no
-    Iceberg catalog is configured (this container has no iceberg
-    jars)."""
-    import pytest as _pytest
-
-    from pdfextract_spark.sinks import write_table
-
-    df = spark.range(12).selectExpr("id", "id % 4 as b")
-    out = str(tmp_path / "t")
-    assert write_table(df, out, mode="overwrite", partition_by=["b"]) == "parquet"
-    back = spark.read.parquet(out)
-    assert back.count() == 12 and "b" in back.columns
-    with _pytest.raises(RuntimeError, match="Iceberg catalog"):
-        write_table(df, "main.db.tbl", mode="overwrite")
-    # a dotted *filename* is a parquet path, not a catalog identifier
-    rel = str(tmp_path / "out.parquet")
-    assert write_table(df, rel, mode="overwrite") == "parquet"
-    assert spark.read.parquet(rel).count() == 12
-    # explicit dispatch overrides auto-detection both ways
-    with _pytest.raises(RuntimeError, match="Iceberg catalog"):
-        write_table(df, "iceberg:main.db.tbl", mode="overwrite")
-    forced = str(tmp_path / "forced.out")
-    assert write_table(df, forced, storage="parquet", mode="overwrite") == "parquet"
-    with _pytest.raises(ValueError, match="storage"):
-        write_table(df, forced, storage="csv")
-    # contradictory prefix + explicit storage is rejected, not guessed
-    with _pytest.raises(ValueError, match="contradictory"):
-        write_table(df, "iceberg:db.t", storage="parquet")
-
-
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Co-located join layout: two tables bucketed the same way on the
-    join key join WITHOUT any Exchange (shuffle) in the physical plan,
-    while the same join on plain parquet shuffles both sides — the
-    bucketing story for repeatedly-joined tables, proven on the plan."""
-    from pdfextract_spark.sinks import write_bucketed
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS bktest")
-    left = spark.range(2000).selectExpr(
-        "concat('conv-', id % 97) AS conv_id", "id AS turn_idx"
-    )
-    right = spark.range(500).selectExpr(
-        "concat('conv-', id % 97) AS conv_id", "id AS ref_id"
-    )
-    try:
-        write_bucketed(left, "bktest.turns", ["conv_id"], n_buckets=8)
-        write_bucketed(right, "bktest.refs", ["conv_id"], n_buckets=8)
-        # disable broadcast so the join would otherwise shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bktest.turns").join(
-            spark.table("bktest.refs"), "conv_id"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:800]
-        assert joined.count() > 0
-        # control: the identical join over non-bucketed data shuffles
-        ctrl = left.join(right, "conv_id")
-        ctrl_plan = ctrl._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in ctrl_plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        spark.sql("DROP TABLE IF EXISTS bktest.turns")
-        spark.sql("DROP TABLE IF EXISTS bktest.refs")
-        spark.sql("DROP DATABASE IF EXISTS bktest")
 
 
 def test_extract_carry_columns(spark):
@@ -755,18 +723,6 @@ def test_job_runs_two_spark_jobs_per_batch(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 2 * 4, len(jobs)
-
-
-def test_write_table_iceberg_rejects_unsupported_modes(spark, tmp_path):
-    """writeTo has no 'ignore'/'errorifexists' analogue; the Iceberg
-    branch used to silently APPEND for those modes."""
-    import pytest
-
-    from pdfextract_spark.sinks import write_table
-
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="ignore"):
-        write_table(df, "cat.db.t", mode="ignore", storage="iceberg")
 
 
 def test_streaming_star_surface_complete():
