@@ -21,6 +21,7 @@ from __future__ import annotations
 import argparse
 import dataclasses
 import sys
+from functools import partial
 
 from .settings import DEFAULT, Settings
 from .worker import settle_worker
@@ -52,16 +53,14 @@ def apply_overrides(settings: Settings, pairs: list[str]) -> Settings:
 def _load_transcripts(spark, args):
     """Shared --input/--synth-from/--format handling (single source of
     truth for the three subcommands)."""
-    if getattr(args, "synth_from", None):
+    if args.synth_from:
         from .sources import synth_transcripts
 
         return synth_transcripts(spark, args.synth_from)
-    if getattr(args, "input", None):
+    if args.input:
         from .sources.tables import read_transcripts
 
-        return read_transcripts(
-            spark, args.input, format=getattr(args, "format", "parquet")
-        )
+        return read_transcripts(spark, args.input, format=args.format)
     raise SystemExit("one of --input / --synth-from is required")
 
 
@@ -82,8 +81,6 @@ def extract_bib(args) -> None:
     """References -> catalog resolution -> one BibTeX entry per
     reference (bin/pdf-extract extract-bib; resolution is a catalog
     join instead of per-row HTTP, see operators/resolve.py)."""
-    import sys as _sys
-
     settings = apply_overrides(DEFAULT, args.overrides)
     spark = _session(args, "pdfextract-spark-bib")
     transcripts = _load_transcripts(spark, args)
@@ -122,14 +119,12 @@ def extract_bib(args) -> None:
     )
     out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
-    print(f"wrote {n} bib entries to {args.output}", file=_sys.stderr)
+    print(f"wrote {n} bib entries to {args.output}", file=sys.stderr)
     spark.stop()
 
 
 def mark(args) -> None:
     """Per-page SVG layout masks (bin/pdf-extract 'mark' analog)."""
-    import sys as _sys
-
     from .plans.masks import extract_masks
 
     settings = apply_overrides(DEFAULT, args.overrides)
@@ -141,15 +136,27 @@ def mark(args) -> None:
     )
     out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
-    print(f"wrote {n} page masks to {args.output}", file=_sys.stderr)
+    print(f"wrote {n} page masks to {args.output}", file=sys.stderr)
     spark.stop()
 
 
 def main(argv: list[str] | None = None) -> None:
+    # flags every subcommand takes
+    shared = argparse.ArgumentParser(add_help=False)
+    shared.add_argument("--input", help="transcripts path")
+    shared.add_argument("--synth-from", help="sf dir with documents.parquet")
+    shared.add_argument("--format", default="parquet",
+                        choices=["parquet", "orc", "json", "csv"],
+                        help="input format (schema-enforced reader)")
+    shared.add_argument("--output", required=True)
+    shared.add_argument("--set", dest="overrides", action="append", default=[])
+    shared.add_argument("--master", default="local[*]")
+
     ap = argparse.ArgumentParser(prog="pdfextract_spark")
     sub = ap.add_subparsers(dest="command", required=True)
 
-    ex = sub.add_parser("extract", help="run the extraction pipeline")
+    ex = sub.add_parser("extract", parents=[shared],
+                        help="run the extraction pipeline")
     for a in ARTIFACTS:
         ex.add_argument(f"--{a}", action="store_true")
     ex.add_argument("--semantic", action="store_true",
@@ -163,49 +170,29 @@ def main(argv: list[str] | None = None) -> None:
                     help="XML output with geometry only, no text content")
     ex.add_argument("--precision", type=int, default=None,
                     help="numeric rounding digits (reference --precision)")
-    ex.add_argument("--input", help="transcripts path")
-    ex.add_argument("--format", default="parquet",
-                    choices=["parquet", "orc", "json", "csv"],
-                    help="input format (schema-enforced reader)")
-    ex.add_argument("--synth-from", help="sf dir with documents.parquet")
-    ex.add_argument("--output", required=True)
     ex.add_argument("--as", dest="render_as", choices=["table", "xml"],
                     default="table")
-    ex.add_argument("--set", dest="overrides", action="append", default=[])
-    ex.add_argument("--master", default="local[*]")
     ex.add_argument("--buckets", type=int, default=0,
                     help="checkpointed/resumable bucketed run")
 
     eb = sub.add_parser(
         "extract-bib",
+        parents=[shared],
         help="extract references, resolve against a metadata catalog, "
         "emit BibTeX entries (reference CLI extract-bib, network-free)",
     )
-    eb.add_argument("--input", help="transcripts parquet path")
-    eb.add_argument("--synth-from", help="sf dir with documents.parquet")
-    eb.add_argument("--format", default="parquet",
-                    choices=["parquet", "orc", "json", "csv"])
     eb.add_argument("--catalog", help="metadata catalog parquet "
                     "(doi,title,author,year); synthetic when omitted")
-    eb.add_argument("--output", required=True)
     eb.add_argument("--min-score", type=float, default=0.5)
-    eb.add_argument("--set", dest="overrides", action="append", default=[])
-    eb.add_argument("--master", default="local[*]")
 
     mk = sub.add_parser(
         "mark",
+        parents=[shared],
         help="render per-page SVG masks of artifact bounding boxes "
         "(reference CLI 'mark'; SVG since the graft has no source PDF "
         "to overlay)",
     )
-    mk.add_argument("--input", help="transcripts parquet path")
-    mk.add_argument("--synth-from", help="sf dir with documents.parquet")
-    mk.add_argument("--format", default="parquet",
-                    choices=["parquet", "orc", "json", "csv"])
-    mk.add_argument("--output", required=True)
     mk.add_argument("--types", default="regions,zones,columns")
-    mk.add_argument("--set", dest="overrides", action="append", default=[])
-    mk.add_argument("--master", default="local[*]")
 
     args = ap.parse_args(argv)
     if args.command == "extract-bib":
@@ -224,52 +211,41 @@ def main(argv: list[str] | None = None) -> None:
     chosen = tuple(chosen)
     want = tuple({"titles": "title"}.get(a, a) for a in chosen) or None
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("pdfextract-spark-cli")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
+    spark = _session(args, "pdfextract-spark-cli")
     transcripts = _load_transcripts(spark, args)
 
     if args.render_as == "xml":
-        from .core import extract_turn
+        import pyarrow as pa
+
         from .core.xmlview import render_turn_xml
+        from .plans.extract import kernel_rows
 
         # flag-less default stays the six primary artifacts: the debug
         # set (characters/chunks/margins) is opt-in — per-glyph XML
         # dwarfs the real outputs (plans/extract.py DEFAULT_ARTIFACTS)
         kernel_want = tuple(chosen) or ARTIFACTS[:6]
-        xml_lines = not args.no_lines
-        xml_outline = args.outline
+        render = partial(
+            render_turn_xml, settings=settings, lines=not args.no_lines,
+            outline=args.outline, zone_filter=zone_filter or None,
+        )
+        schema = pa.schema(
+            [("conv_id", pa.string()), ("turn_idx", pa.int32()), ("xml", pa.string())]
+        )
 
         def to_xml(batches):
             settle_worker()
-            import pandas as pd
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "conv_id": pdf["conv_id"],
-                        "turn_idx": pdf["turn_idx"],
-                        "xml": [
-                            render_turn_xml(
-                                extract_turn(t or "", settings, want=kernel_want),
-                                settings,
-                                lines=xml_lines,
-                                outline=xml_outline,
-                                zone_filter=zone_filter or None,
-                            )
-                            for t in pdf["text"]
-                        ],
-                    }
+            for batch in batches:
+                yield pa.RecordBatch.from_pylist(
+                    [
+                        {"conv_id": conv_id, "turn_idx": turn_idx, "xml": render(res)}
+                        for conv_id, turn_idx, _, res in kernel_rows(
+                            batch, settings, kernel_want, "fail"
+                        )
+                    ],
+                    schema=schema,
                 )
 
-        out = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        out = transcripts.select("conv_id", "turn_idx", "role", "text").mapInArrow(
             to_xml, schema="conv_id string, turn_idx int, xml string"
         )
         out.write.mode("overwrite").parquet(args.output)

@@ -10,6 +10,8 @@ type), no external libraries.
 
 from __future__ import annotations
 
+from .pipeline import artifact_rows
+
 COLORS = {
     "regions": "#1f77b4",
     "zones": "#2ca02c",
@@ -33,6 +35,15 @@ def _rect(obj: dict, color: str, page_height: float) -> str:
     )
 
 
+def _boxes(result: dict, typ: str) -> list[dict]:
+    """The boxes one artifact type draws: a section draws its
+    components, anything else itself."""
+    rows = artifact_rows(result, typ)
+    if typ == "sections":
+        return [c for s in rows for c in s.get("components") or []]
+    return rows
+
+
 def render_mask_svg(
     result: dict,
     page: int,
@@ -43,30 +54,12 @@ def render_mask_svg(
     """One extract_turn() result + page number -> SVG mask of that
     page's artifact bounding boxes (pdf_view.rb draws one overlay per
     page)."""
-    rects: list[str] = []
-    for typ in types:
-        color = COLORS.get(typ, "#000000")
-        objs = result.get(typ) or []
-        if typ == "margins":
-            objs = [
-                dict(m, side=side)
-                for pg, sides in (result.get("margins") or {}).items()
-                if pg == page
-                for side, m in sides.items()
-            ]
-        elif typ == "chunks":
-            objs = (result.get("chunks") or {}).get(page, [])
-        elif isinstance(objs, dict):
-            objs = objs.get(page, [])
-        for o in objs:
-            if o.get("page", page) != page:
-                continue
-            if typ == "sections":
-                for comp in o.get("components") or []:
-                    if comp.get("page") == page:
-                        rects.append(_rect(comp, color, page_height))
-                continue
-            rects.append(_rect(o, color, page_height))
+    rects = [
+        _rect(box, COLORS.get(typ, "#000000"), page_height)
+        for typ in types
+        for box in _boxes(result, typ)
+        if box.get("page", page) == page
+    ]
     body = "".join(rects)
     return (
         f'<svg xmlns="http://www.w3.org/2000/svg" '
@@ -77,17 +70,10 @@ def render_mask_svg(
 
 
 def render_turn_masks(result: dict, **kw) -> dict[int, str]:
-    """All pages of one turn -> {page: svg}.  Pages are derived from
-    every artifact the result carries — list-shaped (regions, zones,
-    columns, characters) and page-keyed dicts (margins, chunks) — so
-    e.g. ``mark --types margins`` still finds its pages."""
-    pages = set()
-    for typ in ("regions", "zones", "columns", "characters", "sections"):
-        for o in result.get(typ) or []:
-            if isinstance(o, dict) and "page" in o:
-                pages.add(o["page"])
-    for typ in ("margins", "chunks"):
-        v = result.get(typ)
-        if isinstance(v, dict):
-            pages.update(v.keys())
+    """All pages of one turn -> {page: svg}.  Pages are those of every
+    box the result carries (a section's are its components'), so e.g.
+    ``mark --types sections`` still finds its pages."""
+    pages = {
+        box["page"] for typ in COLORS for box in _boxes(result, typ) if "page" in box
+    }
     return {p: render_mask_svg(result, p, **kw) for p in sorted(pages)}

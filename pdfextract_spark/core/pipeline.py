@@ -147,6 +147,27 @@ def extract_turn(
     return out
 
 
+def artifact_rows(result: dict, name: str) -> list[dict]:
+    """One artifact of an extract_turn() result as the flat object list
+    every view reads (pdf.rb:113-124 ``@spatial_objects[type]``):
+    page-keyed ``chunks`` and ``margins`` flattened in page order, a
+    margin gaining ``side`` from its key, a zone gaining ``zone`` (its
+    ``group``).  Any other artifact is the kernel's list as is."""
+    if name == "chunks":
+        chunks = result.get("chunks") or {}
+        return [c for pg in sorted(chunks) for c in chunks[pg]]
+    if name == "margins":
+        margins = result.get("margins") or {}
+        return [
+            dict(m, side=side)
+            for pg in sorted(margins)
+            for side, m in margins[pg].items()
+        ]
+    if name == "zones":
+        return [dict(z, zone=z["group"]) for z in result.get("zones") or []]
+    return result.get(name) or []
+
+
 def render_turn(result: dict, settings: Settings = DEFAULT) -> dict:
     """Canonical sink rendering (SURVEY.md S5): numeric rounding to
     ``settings.precision`` (xml_view.rb:24-29) and transliteration of

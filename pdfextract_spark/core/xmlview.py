@@ -16,6 +16,7 @@ from xml.sax.saxutils import escape, quoteattr
 
 from ..settings import DEFAULT, Settings
 from . import language
+from .pipeline import artifact_rows
 
 # xml_view.rb:8-15
 IGNORED_ATTRIBUTES = ("content",)
@@ -24,6 +25,11 @@ NUMERIC_ATTRIBUTES = (
     "x", "y", "width", "height", "line_height", "page_height",
     "page_width", "x_offset", "y_offset", "spacing", "letter_ratio",
     "cap_ratio", "year_ratio",
+)
+# artifact order in render_turn_xml output; the title comes last
+_XML_TYPES = (
+    "regions", "zones", "columns", "sections", "references", "characters",
+    "margins", "chunks",
 )
 
 
@@ -110,29 +116,9 @@ def render_turn_xml(
     the reference CLI's render options: --no-lines (lines=False),
     --outline (geometry only), and zone sub-type selection
     (zone_filter=['headers',...])."""
-    zones = [
-        {**z, "zone": z.get("group")} for z in result.get("zones") or []
-    ]
+    objs = {name: artifact_rows(result, name) for name in _XML_TYPES}
     if zone_filter:
-        zones = [z for z in zones if z["zone"] in zone_filter]
-    objs = {
-        "regions": result.get("regions") or [],
-        "zones": zones,
-        "columns": result.get("columns") or [],
-        "sections": result.get("sections") or [],
-        "references": result.get("references") or [],
-        "characters": result.get("characters") or [],
-        "margins": [
-            dict(m, side=side)
-            for pg in sorted(result.get("margins") or {})
-            for side, m in (result.get("margins") or {})[pg].items()
-        ],
-        "chunks": [
-            c
-            for pg in sorted(result.get("chunks") or {})
-            for c in (result.get("chunks") or {})[pg]
-        ],
-    }
+        objs["zones"] = [z for z in objs["zones"] if z["zone"] in zone_filter]
     title = result.get("title")
     if title:
         objs["titles"] = [title]

@@ -3,10 +3,9 @@ opaque binary columns with typed metadata).
 
 The Spark-side architecture is fully real — schemas, partitioning,
 Arrow batch shapes, mapInPandas UDF signatures — while the actual
-media decode is stubbed behind ``NotImplementedError`` or a
-deterministic fake, because no image/audio libraries exist in this
-container.  Swapping ``_decode_image_stub`` for PIL/libvips keeps
-every plan unchanged.
+media decode is a deterministic fake, because no image/audio
+libraries exist in this container.  Swapping ``_decode_image_stub``
+for PIL/libvips keeps every plan unchanged.
 """
 
 from __future__ import annotations
@@ -102,19 +101,6 @@ def decode_image(payload: bytes, use_stub: bool = True) -> np.ndarray:
 
     with _PILImage.open(io.BytesIO(payload)) as img:
         return np.asarray(img.convert("L"), dtype=np.float32).ravel()
-
-
-def decode_audio(payload: bytes):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "audio decode requires ffmpeg/librosa (absent in this container); "
-        "the plan-level plumbing in media_features() is the deliverable"
-    )
-
-
-def sample_video_frames(payload: bytes, every_ms: int = 1000):  # pragma: no cover
-    raise NotImplementedError(
-        "video frame sampling requires ffmpeg (absent in this container)"
-    )
 
 
 def media_features(

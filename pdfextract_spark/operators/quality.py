@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..core.names import STOPWORDS
 from .dedup import _md5_int, normalize_text
 
 # A compact high-frequency English function-word set for language ID
@@ -96,11 +95,6 @@ def char_shingle_fingerprint(col: Column, k: int = 8) -> Column:
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     shingles = F.transform(idx, lambda i: F.substring(t, i, k))
     return F.array_min(F.transform(shingles, _md5_int))
-
-
-def reference_stopwords() -> list[str]:
-    """The verbatim stopword list from the reference's data file."""
-    return list(STOPWORDS)
 
 
 LANG_FUNCTION_WORDS = {

@@ -17,9 +17,7 @@ title/authors/year/DOI — a small fraction of a 100 TB corpus):
 4. keep the argmax per reference above ``min_score``.
 
 Everything is hash-join + higher-order functions — no Python in the
-hot path, no network.  The HTTP resolvers remain available as a
-documented swap-in for interactive use (stubbed here: this container
-has no network).
+hot path, no network.
 """
 
 from __future__ import annotations
@@ -152,11 +150,3 @@ def synth_citation_catalog(spark, n: int = 200) -> DataFrame:
         (F.lit(1970) + (F.col("id") % 50)).cast("int").alias("year"),
     )
 
-
-def resolve_via_http(*_args, **_kwargs):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "per-reference HTTP resolution (CrossRef Sigg resolve.rb:12-23, "
-        "FreeCite resolve.rb:58-63) needs network access, absent in this "
-        "container; use resolve_references() against a catalog table — "
-        "the architecture a cluster should use anyway"
-    )

@@ -60,11 +60,6 @@ def collapse_ws(col: Column) -> Column:
     return F.regexp_replace(col, r"\s+", " ")
 
 
-def round_out(col: Column, precision: int = 2) -> Column:
-    """F13 sink rounding (xml_view.rb:24-29)."""
-    return F.round(col, precision)
-
-
 def hyphen_join(lines_col: Column) -> Column:
     """F7 (spatial.rb:98-112): join an array<string> of lines with the
     hyphen rule — a line ending '-' contributes content minus the

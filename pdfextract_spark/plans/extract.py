@@ -18,6 +18,8 @@ drift — SURVEY.md §4).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -30,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import extract_turn
+from ..core import artifact_rows, extract_turn
 from ..core.language import transliterate
 from ..core.spatial import get_text_content
 from ..settings import DEFAULT, Settings
@@ -206,29 +208,60 @@ def _renderer(dtype, rnd, name=None):
     return None
 
 
-def _chunks_view(res: dict) -> list:
-    ch = res.get("chunks") or {}
-    return [c for pg in sorted(ch) for c in ch[pg]]
-
-
-def _margins_view(res: dict) -> list:
-    mp = res.get("margins") or {}
-    return [dict(m, side=side) for pg in sorted(mp) for side, m in mp[pg].items()]
-
-
-# Where a kernel result's shape differs from its RESULT_SCHEMA field;
-# every other artifact is the kernel's list as is.  Views keep the
-# kernel's extra keys (page_width, group, ...): pa.array reads struct
-# fields by name and ignores the rest.
+# Where a RESULT_SCHEMA field is not the kernel's artifact rows
+# (core.artifact_rows): the title is one nullable struct, and a section
+# carries its text.  Rows keep the kernel's extra keys (page_width,
+# group, ...): pa.array reads struct fields by name and ignores the rest.
 _VIEWS = {
     "title": lambda res: res.get("title"),
-    "zones": lambda res: [dict(z, zone=z["group"]) for z in res.get("zones") or []],
     "sections": lambda res: [
         dict(s, content=get_text_content(s)) for s in res.get("sections") or []
     ],
-    "chunks": _chunks_view,
-    "margins": _margins_view,
 }
+
+
+def kernel_rows(batch, settings: Settings, kernel_want: tuple, on_error: str):
+    """One Arrow batch of transcripts -> ``(conv_id, turn_idx, role,
+    result)`` per row: the per-turn kernel call of every Python stage
+    that extracts.  Only the four kernel inputs are converted to Python
+    objects, so other columns in the batch cost nothing per row.
+
+    ``on_error="fail"`` re-raises a kernel exception with the offending
+    (conv_id, turn_idx); ``"skip"`` yields a sentinel result instead
+    (``page_count = -1``, metrics carrying chars_in only).  A NULL
+    ``turn_idx`` obeys ``on_error`` too."""
+    names = batch.schema.names
+    inputs = [
+        batch.column(names.index(c)).to_pylist()
+        for c in ("conv_id", "turn_idx", "role", "text")
+    ]
+    for conv_id, turn_idx, role, text in zip(*inputs):
+        try:
+            res = extract_turn(text or "", settings, want=kernel_want)
+        except Exception as exc:
+            if on_error == "fail":
+                raise RuntimeError(
+                    f"extraction failed for conv_id={conv_id!r} "
+                    f"turn_idx={turn_idx}: {type(exc).__name__}: {exc}"
+                ) from exc
+            res = {
+                "page_count": -1,
+                "metrics": {
+                    "chars_in": len(text or ""),
+                    "chars_truncated": 0,
+                    "regions_found": 0,
+                    "sections_found": 0,
+                    "refs_matched": 0,
+                },
+            }
+        # permissive JSON reads keep malformed rows as all-NULL
+        if turn_idx is None and on_error == "fail":
+            raise RuntimeError(
+                f"NULL turn_idx for conv_id={conv_id!r} "
+                f"(malformed input row — permissive read?); "
+                f"clean the input or pass on_error='skip'"
+            )
+        yield conv_id, turn_idx, role, res
 
 
 # DEFAULT_ARTIFACTS is what extract() emits when ``want`` is omitted
@@ -332,7 +365,7 @@ def extract(
             return None if v is None else round(v, precision)
 
         views = [
-            (name, _VIEWS.get(name, lambda res, name=name: res.get(name) or []))
+            (name, _VIEWS.get(name, partial(artifact_rows, name=name)))
             for name in selected
         ]
         renderers = [
@@ -342,52 +375,15 @@ def extract(
         ]
         kernel_want = tuple({"title": "titles"}.get(k, k) for k in selected)
         for batch in batches:
-            # convert ONLY the four kernel inputs to Python objects:
-            # carry columns are copied verbatim from the Arrow batch
-            # below, so a full to_pydict would pay O(rows x width)
-            # object conversion for data the loop never reads
-            names = batch.schema.names
-            pdf = {
-                c: batch.column(names.index(c)).to_pylist()
-                for c in ("conv_id", "turn_idx", "role", "text")
-            }
             # column-wise accumulation: one Python list per output
             # field, rendered and converted once per batch — no
             # per-turn row dict to transpose afterwards
             cols: dict[str, list] = {f.name: [] for f in computed_arrow}
-            for conv_id, turn_idx, role, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"]
+            for conv_id, turn_idx, role, res in kernel_rows(
+                batch, settings, kernel_want, on_error
             ):
-                try:
-                    res = extract_turn(text or "", settings, want=kernel_want)
-                except Exception as exc:
-                    if on_error == "fail":
-                        raise RuntimeError(
-                            f"extraction failed for conv_id={conv_id!r} "
-                            f"turn_idx={turn_idx}: {type(exc).__name__}: {exc}"
-                        ) from exc
-                    res = {
-                        "page_count": -1,
-                        "metrics": {
-                            "chars_in": len(text or ""),
-                            "chars_truncated": 0,
-                            "regions_found": 0,
-                            "sections_found": 0,
-                            "refs_matched": 0,
-                        },
-                    }
-                # a NULL turn_idx (permissive JSON reads keep
-                # malformed rows as all-NULL) must obey on_error: the
-                # int() coercion sat OUTSIDE the kernel try, so one
-                # poison row killed the job even under 'skip'
-                if turn_idx is None and on_error == "fail":
-                    raise RuntimeError(
-                        f"NULL turn_idx for conv_id={conv_id!r} "
-                        f"(malformed input row — permissive read?); "
-                        f"clean the input or pass on_error='skip'"
-                    )
                 cols["conv_id"].append(conv_id)
-                cols["turn_idx"].append(None if turn_idx is None else int(turn_idx))
+                cols["turn_idx"].append(turn_idx)
                 cols["role"].append(role)
                 cols["page_count"].append(res["page_count"])
                 cols["metrics"].append(res["metrics"])

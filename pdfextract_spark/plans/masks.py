@@ -1,9 +1,9 @@
 """Distributed layout-mask sink (SURVEY.md S6, ``view/pdf_view.rb:7-35``).
 
 The reference's ``mark`` command draws translucent artifact bounding
-boxes over each page.  This plan runs the same per-turn kernel as
-``plans/extract.py`` and renders the per-page SVG masks
-(``core/maskview.py``) inside the SAME Arrow batch — one narrow
+boxes over each page.  This plan runs the extraction plan's per-turn
+kernel loop (``plans.extract.kernel_rows``) and renders the per-page
+SVG masks (``core/maskview.py``) inside the SAME Arrow batch — one narrow
 ``mapInArrow`` stage, zero shuffles, no driver collection — emitting
 one row per (turn, page) with the mask plus a compact fingerprint
 (rect count, byte length, md5) so equality checks don't need to diff
@@ -28,10 +28,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import extract_turn
-from ..core.maskview import render_turn_masks
+from ..core.maskview import COLORS, render_turn_masks
 from ..settings import DEFAULT, Settings
 from ..worker import settle_worker
+from .extract import kernel_rows
 
 MASK_SCHEMA = StructType(
     [
@@ -44,12 +44,6 @@ MASK_SCHEMA = StructType(
         StructField("svg", StringType()),
     ]
 )
-
-_VALID_TYPES = frozenset(
-    ("regions", "zones", "columns", "margins", "chunks", "characters",
-     "sections")
-)
-
 
 def extract_masks(
     df: DataFrame,
@@ -64,7 +58,7 @@ def extract_masks(
     ``with_svg=False`` drops the SVG body column (fingerprint only) for
     pipelines that audit masks at scale without storing them.
     """
-    unknown = [t for t in types if t not in _VALID_TYPES]
+    unknown = [t for t in types if t not in COLORS]
     if unknown:
         raise ValueError(f"unknown mask types: {unknown}")
     kernel_want = tuple(types)
@@ -79,7 +73,7 @@ def extract_masks(
     page_w = settings.typesetter.page_width
     page_h = settings.typesetter.page_height
 
-    src = df.select("conv_id", "turn_idx", "text")
+    src = df.select("conv_id", "turn_idx", "role", "text")
     if repartition:
         src = src.repartition(
             repartition, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
@@ -88,19 +82,17 @@ def extract_masks(
     def run(batches):
         settle_worker()
         for batch in batches:
-            pdf = batch.to_pydict()
             cols: dict[str, list] = {f.name: [] for f in arrow_schema}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
+            for conv_id, turn_idx, _, res in kernel_rows(
+                batch, settings, kernel_want, "fail"
             ):
-                res = extract_turn(text or "", settings, want=kernel_want)
                 masks = render_turn_masks(
                     res, page_width=page_w, page_height=page_h, types=types
                 )
                 for page, svg in masks.items():
                     cols["conv_id"].append(conv_id)
-                    cols["turn_idx"].append(int(turn_idx))
-                    cols["page"].append(int(page))
+                    cols["turn_idx"].append(turn_idx)
+                    cols["page"].append(page)
                     cols["n_rects"].append(svg.count("<rect") - 1)  # minus bg
                     cols["svg_len"].append(len(svg))
                     cols["svg_md5"].append(

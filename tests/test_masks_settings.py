@@ -102,6 +102,58 @@ def test_cli_mark_writes_the_mask_plan(spark, tmp_path, monkeypatch):
     assert expected and got == expected
 
 
+def test_extract_masks_sections_only(spark):
+    """Sections carry no page of their own: a sections-only mask draws
+    each section's components on their pages, one rect per component."""
+    from collections import Counter
+
+    from pdfextract_spark.core import extract_turn
+    from pdfextract_spark.plans.masks import extract_masks
+
+    out = extract_masks(make_transcripts(spark), types=("sections",)).collect()
+    got = {(r["turn_idx"], r["page"]): r["n_rects"] for r in out}
+    expected = Counter(
+        (i, c["page"])
+        for i, text in enumerate(TEXTS)
+        for s in extract_turn(text, want=("sections",))["sections"]
+        for c in s["components"]
+    )
+    assert expected and got == dict(expected)
+
+
+def test_cli_extract_as_xml_writes_render_turn_xml(spark, tmp_path, monkeypatch):
+    """`python -m pdfextract_spark extract --as xml` writes one
+    (conv_id, turn_idx, xml) row per turn, equal to the kernel's XML
+    renderer, for the default flags and for --no-lines --headers."""
+    from pdfextract_spark.__main__ import main
+    from pdfextract_spark.core import extract_turn
+    from pdfextract_spark.core.xmlview import render_turn_xml
+
+    src = str(tmp_path / "in")
+    make_transcripts(spark).write.parquet(src)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    cases = [
+        ([], ("regions", "zones", "columns", "sections", "titles", "references"), {}),
+        (["--no-lines", "--headers"], ("zones",),
+         {"lines": False, "zone_filter": ["headers"]}),
+    ]
+    for n, (flags, want, kw) in enumerate(cases):
+        out = str(tmp_path / f"out{n}")
+        try:
+            main(["extract", "--as", "xml", "--input", src, "--output", out,
+                  "--master", "local[1]", *flags])
+        finally:
+            spark.sparkContext.setLogLevel("ERROR")
+        written = spark.read.parquet(out)
+        assert written.columns == ["conv_id", "turn_idx", "xml"]
+        got = {(r["conv_id"], r["turn_idx"]): r["xml"] for r in written.collect()}
+        expected = {
+            (f"c{i}", i): render_turn_xml(extract_turn(text, want=want), **kw)
+            for i, text in enumerate(TEXTS)
+        }
+        assert got == expected, flags
+
+
 def test_font_metrics_match_afm_table(spark):
     """S3: the per-font min/max glyph advance from the Spark rollup
     equals milli-em units x size / 1000 (2 dp) from the engine's

@@ -295,6 +295,7 @@ def test_extract_on_error_skip_and_fail_context(spark):
     import pytest as _pytest
 
     from pdfextract_spark.plans import extract
+    from pdfextract_spark.plans.masks import extract_masks
     from pdfextract_spark.settings import Settings, Typesetter
 
     df = make_transcripts(spark)
@@ -312,9 +313,11 @@ def test_extract_on_error_skip_and_fail_context(spark):
     # chars_in still recorded for lineage accounting
     assert all(r["metrics"]["chars_in"] > 0 for r in bad)
 
-    with _pytest.raises(Exception) as ei:
-        extract(df, settings=poison).collect()
-    assert "conv_id=" in str(ei.value) and "turn_idx=" in str(ei.value)
+    # the mask plan runs the same kernel loop, always with 'fail'
+    for plan in (extract, extract_masks):
+        with _pytest.raises(Exception) as ei:
+            plan(df, settings=poison).collect()
+        assert "conv_id=" in str(ei.value) and "turn_idx=" in str(ei.value)
 
     with _pytest.raises(ValueError):
         extract(df, on_error="bogus")
@@ -555,6 +558,7 @@ def test_extract_null_turn_idx_obeys_on_error(spark):
     import pytest
 
     from pdfextract_spark.plans.extract import extract
+    from pdfextract_spark.plans.masks import extract_masks
 
     df = spark.createDataFrame(
         [("c1", 0, "user", "fine text"), ("c1", None, "user", "poison")],
@@ -567,6 +571,8 @@ def test_extract_null_turn_idx_obeys_on_error(spark):
     ) == [False, True]
     with pytest.raises(Exception, match="NULL turn_idx"):
         extract(df, on_error="fail", want=()).collect()
+    with pytest.raises(Exception, match="NULL turn_idx"):
+        extract_masks(df).collect()
 
 
 def test_extract_rejects_unknown_want(spark):
