@@ -3,7 +3,8 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric", "value" (total sec), "unit": "sec", "queries":
-{name: sec}, "sf", plus extraction-throughput extras}.
+{name: sec}, "sf", plus extraction-throughput extras}.  The per-window
+samples behind it go to .bench/bands.json.
 
 Modes:
   python bench.py                      # headline suite, one JSON line
@@ -54,9 +55,9 @@ def sf_of(sf_dir: str) -> float:
 # 3 windows draws stochastically lower than the min-of-2 rounds 1-4
 # recorded (their "min_of" field), so the window count is emitted as
 # "windows", never as "min_of", and cross-round comparisons should
-# read the per-query "bands" (samples, medians, same-window ratios),
-# not the headline min.  Scaling RATIOS use time-paired rounds
-# instead — tools/scaling.py.
+# read the per-query bands (samples, medians, same-window ratios,
+# written to BANDS_FILE), not the headline min.  Scaling RATIOS use
+# time-paired rounds instead — tools/scaling.py.
 WINDOWS = int(os.environ.get("SPARK_GRAFT_BENCH_WINDOWS", "3"))
 if WINDOWS < 1:
     raise SystemExit(
@@ -97,6 +98,80 @@ BENCH_QUERIES = [
     # amortized regime a large run lives in
     "dedup_substring_stats_8x",
 ]
+
+
+# the per-window samples behind every ratio; too long for the stdout
+# line, whose last 2,000 characters are all the round driver keeps
+BANDS_FILE = ".bench/bands.json"
+
+
+def summarize(
+    queries: dict[str, float],
+    spark_w: dict[str, list[float]] | None,
+    duck_w: dict[str, list[float]] | None,
+    sf_dir: str,
+    cores: int,
+    n_turns: int,
+    tps: float,
+) -> tuple[dict, dict]:
+    """The headline dict and the per-query ``bands`` (samples, medians,
+    same-window ratios) from the per-window Spark and DuckDB seconds;
+    ``spark_w`` is None on an extraction-only run.  Fills ``queries``
+    with each benched query's min-across-windows seconds."""
+    import statistics
+
+    bands: dict = {}
+    extras: dict = {}
+    if spark_w is not None:
+        for name in BENCH_QUERIES:
+            sw, dw = spark_w[name], duck_w[name]
+            ratios = [s / d for s, d in zip(sw, dw)]
+            queries[name] = round(min(sw), 3)
+            bands[name] = {
+                "spark": [round(x, 3) for x in sw],
+                "duckdb": [round(x, 3) for x in dw],
+                "spark_median": round(statistics.median(sw), 3),
+                "duckdb_median": round(statistics.median(dw), 3),
+                "ratio_by_window": [round(r, 2) for r in ratios],
+                "ratio_min": round(min(ratios), 2),
+                "ratio_median": round(statistics.median(ratios), 2),
+            }
+        extras["windows"] = WINDOWS
+        extras["bands_file"] = BANDS_FILE
+        # min-across-windows denominators keep the field shape earlier
+        # rounds recorded; the same-window pairing lives in the bands
+        extras["duckdb_sec"] = {
+            name: round(min(duck_w[name]), 3) for name in BENCH_QUERIES
+        }
+        # j1_spark_over_duckdb keeps its rounds-1-4 min/min semantics
+        # (queries[j1] / j1_duckdb_sec reproduces it) so cross-round
+        # reads of the field compare like with like; the same-window
+        # median lives in j1_ratio_median (and in the bands)
+        extras["j1_duckdb_sec"] = extras["duckdb_sec"]["j1_interval_join"]
+        extras["j1_spark_over_duckdb"] = round(
+            queries["j1_interval_join"] / extras["j1_duckdb_sec"], 2
+        )
+        extras["j1_ratio_median"] = bands["j1_interval_join"][
+            "ratio_median"
+        ]
+    out = {
+        "metric": "headline suite wall time (extraction + operators)",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf_of(sf_dir),
+        "cores": cores,
+        "turns": n_turns,
+        "extract_turns_per_sec": round(tps, 1),
+        **extras,
+    }
+    return out, bands
+
+
+def headline_line(out: dict) -> str:
+    """The one JSON line bench.py prints, without spaces after the
+    separators to stay inside the driver's tail capture."""
+    return json.dumps(out, separators=(",", ":"))
 
 
 def run_extraction(spark, sf_dir: str, turns_per_doc: int):
@@ -155,6 +230,7 @@ def main() -> None:
     queries["extract_pipeline"] = round(ext_sec, 3)
     queries["extract_refs_only"] = round(refs_sec, 3)
 
+    spark_w = duck_w = None
     if not extract_only:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
@@ -178,8 +254,6 @@ def main() -> None:
         # storage after each timed run instead of accumulating across
         # the whole suite + the DuckDB denominator pass.  The release
         # happens AFTER the timed window, so timings are unchanged.
-        import statistics
-
         import duckdb
 
         from pdfextract_spark.operators.fence import fence_scope
@@ -195,8 +269,8 @@ def main() -> None:
                 f"'{sf_dir}/{tname}.parquet'"
             )
 
-        spark_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
-        duck_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
+        spark_w = {n: [] for n in BENCH_QUERIES}
+        duck_w = {n: [] for n in BENCH_QUERIES}
         for _w in range(WINDOWS):
             # each query's DuckDB oracle runs IMMEDIATELY after its
             # Spark run — the two sides of a ratio are seconds apart,
@@ -213,54 +287,16 @@ def main() -> None:
                 con.sql(ORACLES[name]).fetchall()
                 duck_w[name].append(time.time() - t0)
 
-        bands = {}
-        for name in BENCH_QUERIES:
-            sw, dw = spark_w[name], duck_w[name]
-            ratios = [s / d for s, d in zip(sw, dw)]
-            queries[name] = round(min(sw), 3)
-            bands[name] = {
-                "spark": [round(x, 3) for x in sw],
-                "duckdb": [round(x, 3) for x in dw],
-                "spark_median": round(statistics.median(sw), 3),
-                "duckdb_median": round(statistics.median(dw), 3),
-                "ratio_by_window": [round(r, 2) for r in ratios],
-                "ratio_min": round(min(ratios), 2),
-                "ratio_median": round(statistics.median(ratios), 2),
-            }
-
-    total = round(sum(queries.values()), 3)
-    extras: dict = {}
-    if not extract_only:
-        extras["windows"] = WINDOWS
-        extras["bands"] = bands
-        # min-across-windows denominators keep the field shape earlier
-        # rounds recorded; the same-window pairing lives in "bands"
-        extras["duckdb_sec"] = {
-            name: round(min(duck_w[name]), 3) for name in BENCH_QUERIES
-        }
-        # j1_spark_over_duckdb keeps its rounds-1-4 min/min semantics
-        # (queries[j1] / j1_duckdb_sec reproduces it) so cross-round
-        # reads of the field compare like with like; the same-window
-        # median lives in the new j1_ratio_median (and in bands)
-        extras["j1_duckdb_sec"] = extras["duckdb_sec"]["j1_interval_join"]
-        extras["j1_spark_over_duckdb"] = round(
-            queries["j1_interval_join"] / extras["j1_duckdb_sec"], 2
-        )
-        extras["j1_ratio_median"] = bands["j1_interval_join"][
-            "ratio_median"
-        ]
-    out = {
-        "metric": "headline suite wall time (extraction + operators)",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": sf_of(sf_dir),
-        "cores": cores,
-        "turns": n_turns,
-        "extract_turns_per_sec": round(tps, 1),
-        **extras,
-    }
-    print(json.dumps(out))
+    out, bands = summarize(
+        queries, spark_w, duck_w, sf_dir, cores, n_turns, tps
+    )
+    if bands:
+        root = os.path.dirname(os.path.abspath(__file__))
+        path = os.path.join(root, BANDS_FILE)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(bands, f, indent=1)
+    print(headline_line(out))
 
 
 if __name__ == "__main__":

@@ -108,22 +108,24 @@ def is_empty_start_exc(exc: Exception) -> bool:
 
 
 def read_parquet_or_none(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession, path: str, schema: str | None = None
 ) -> DataFrame | None:
     """Read a parquet store, returning None when it does not exist
     yet and re-raising every other AnalysisException.  A missing path
     is found through the filesystem, not by a failing read: a failed
     query reaches every registered query listener, and with an
     ``Observation`` in the session that logs a listener exception on
-    each probe of a fresh store."""
+    each probe of a fresh store.  A DDL ``schema`` is read as declared
+    instead of inferred (inference is a Spark job); a column missing
+    from the files reads as NULL."""
     from pyspark.errors import AnalysisException
 
     fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
     reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
         return reader.parquet(path)
     except AnalysisException as exc:

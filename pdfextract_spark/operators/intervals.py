@@ -64,24 +64,3 @@ def merge_intervals(
         .agg(*aggs)
         .drop("_island")
     )
-
-
-def interval_stats(
-    df: DataFrame,
-    part_cols: list[str],
-    lo: str = "lo",
-    hi: str = "hi",
-) -> DataFrame:
-    """MultiRange's aggregate views per partition key: count, min, max,
-    covered, widest, narrowest, avg (multi_range.rb:48-76)."""
-    merged = merge_intervals(df, part_cols, lo, hi)
-    width = F.col(hi) - F.col(lo)
-    return merged.groupBy(*part_cols).agg(
-        F.count("*").alias("n_intervals"),
-        F.min(lo).alias("mask_min"),
-        F.max(hi).alias("mask_max"),
-        F.sum(width).alias("covered"),
-        F.max(width).alias("widest"),
-        F.min(width).alias("narrowest"),
-        F.avg(width).alias("avg_width"),
-    )

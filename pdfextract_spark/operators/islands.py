@@ -33,34 +33,6 @@ def islands(
     )
 
 
-def sessionize(
-    df: DataFrame,
-    part_cols: list[str],
-    ts_col: str,
-    gap_seconds: float,
-) -> DataFrame:
-    """A2 as sessionization: start a new island when the gap to the
-    previous row exceeds ``gap_seconds`` (char_slop/word_slop analog
-    over time instead of x)."""
-    w = Window.partitionBy(*part_cols).orderBy(ts_col)
-    prev = F.lag(F.col(ts_col)).over(w)
-    gap = F.col(ts_col).cast("double") - prev.cast("double")
-    # _rn assigned in the same window evaluation as the lag; the
-    # cumsum inside islands() is keyed on it so duplicate timestamps
-    # cannot permute between the flag pass and the cumsum pass (same
-    # fix as intervals.merge_intervals)
-    flagged = df.select(
-        "*", F.row_number().over(w).alias("_rn"), gap.alias("_gap")
-    )
-    return islands(
-        flagged,
-        part_cols,
-        "_rn",
-        F.col("_gap").isNull() | (F.col("_gap") > gap_seconds),
-        "session_id",
-    ).drop("_gap", "_rn")
-
-
 def partition_at(
     df: DataFrame,
     part_cols: list[str],

@@ -87,16 +87,14 @@ def completed_buckets(
     # reads may map to "nothing committed yet"
     from .ioutil import read_parquet_or_none
 
+    # declared schema: lineage written before the n_buckets pin reads
+    # it as NULL, which the guard below skips
     lineage = read_parquet_or_none(
-        spark, f"{out_dir}/{LINEAGE_SUBDIR}", merge_schema=True
+        spark, f"{out_dir}/{LINEAGE_SUBDIR}", LINEAGE_DDL
     )
     if lineage is None:
         return set()
-    # lineage written before the n_buckets pin has no such column
-    pinned = "n_buckets" in lineage.columns
-    rows = lineage.select(
-        "bucket", "n_buckets" if pinned else F.lit(None).alias("n_buckets")
-    ).distinct().collect()
+    rows = lineage.select("bucket", "n_buckets").distinct().collect()
     if n_buckets is not None:
         bad = [r[1] for r in rows if r[1] is not None and r[1] != n_buckets]
         if bad:

@@ -38,22 +38,6 @@ def test_merge_intervals_union(spark):
     assert k1 == [(0, 20), (30, 40)]
 
 
-def test_interval_stats_matches_multirange(spark):
-    # cross-check the SQL form against the in-kernel MultiRange (A4)
-    from pdfextract_spark.core.multirange import MultiRange
-
-    ivs = [(0, 10), (5, 20), (30, 40), (41, 45), (100, 130)]
-    m = MultiRange()
-    for lo, hi in ivs:
-        m.append(lo, hi)
-    df = spark.createDataFrame([(1, lo, hi) for lo, hi in ivs], "k int, lo int, hi int")
-    row = intervals.interval_stats(df, ["k"]).collect()[0]
-    assert row["n_intervals"] == m.count
-    assert row["mask_min"] == m.min and row["mask_max"] == m.max
-    assert row["covered"] == m.covered
-    assert row["widest"] == m.widest and row["narrowest"] == m.narrowest
-
-
 def test_top_k_and_flex(spark):
     df = spark.createDataFrame(
         [(1, "a", 10.0), (1, "b", 9.0), (1, "c", 5.0), (2, "d", 1.0)],

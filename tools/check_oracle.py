@@ -169,7 +169,12 @@ def main():
             print(f"FAIL {name}: {'; '.join(problems)} ({time.time()-t0:.1f}s)")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            # the hash lets two checkouts' runs be diffed line by line
+            # (strip the trailing seconds first)
+            print(
+                f"PASS {name}: {len(srows)} rows, hash {sh}"
+                f" ({time.time()-t0:.1f}s)"
+            )
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
