@@ -13,14 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .fence import fence as _fence
-from .fence import release_fence as _release_fence
-
-
-def _md5_int(col: Column) -> Column:
-    """First 12 hex digits of md5 as a bigint — stable across Spark and
-    DuckDB (both expose md5 as lowercase hex), unlike xxhash64."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
+from .fence import fence, release_fence
 
 
 def normalize_text(col: Column) -> Column:
@@ -72,39 +65,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
 CHUNKS_PER_MD5 = 4  # md5's 32 hex chars -> 4 independent 8-hex values
 
 
-def _mh_expr(s: int, shingle_col: Column) -> Column:
-    """MinHash function s over one shingle: 8 hex chars (32 bits) of
-    md5(shingle || '#' || salt), where 4 functions share one md5 call
-    via non-overlapping substrings (md5 output bits are independent).
-
-    Fixed-width lowercase hex compares lexicographically ==
-    numerically, so a string min IS the numeric MinHash — and any
-    md5-equipped engine (the DuckDB oracle) reproduces it verbatim."""
-    salt = s // CHUNKS_PER_MD5
-    off = (s % CHUNKS_PER_MD5) * 8 + 1
-    return F.substring(F.md5(F.concat(shingle_col, F.lit(f"#{salt}"))), off, 8)
-
-
-def minhash_signature(col: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature as array<string> (see _mh_expr).
-
-    NOTE the closure shape: ``F.transform`` passes the ELEMENT INDEX
-    to any two-parameter callable, so the idiomatic ``lambda x, s=s:``
-    default-arg trick silently binds the index over the seed — the
-    seed must be captured by a dedicated single-parameter closure."""
-    sh = word_shingles(col, k)
-
-    def mh(s: int):
-        return lambda x: _mh_expr(s, x)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, mh(s))).alias(f"mh{s}")
-            for s in range(num_hashes)
-        ]
-    )
-
-
 def minhash_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -121,7 +81,14 @@ def minhash_bands(
     ``min`` aggregation collapses to one row per doc per partition
     before the single shuffle.  (The naive nested-expression form
     recomputes the shingle array once per seed — 16x the hashing — and
-    defeats whole-stage codegen with a giant expression tree.)"""
+    defeats whole-stage codegen with a giant expression tree.)
+
+    MinHash function s is 8 hex chars (32 bits) of
+    md5(shingle || '#' || s // 4): four functions share one md5 via
+    non-overlapping substrings (md5 output bits are independent).
+    Fixed-width lowercase hex compares lexicographically ==
+    numerically, so the string min IS the numeric MinHash, and any
+    md5-equipped engine (the DuckDB oracle) reproduces it verbatim."""
     if band_size <= 0 or num_hashes % band_size != 0:
         raise ValueError(
             f"num_hashes={num_hashes} must be a positive multiple of "
@@ -136,8 +103,9 @@ def minhash_bands(
     )
     # project each salt's md5 ONCE before the aggregation: Catalyst
     # does not common-subexpression-eliminate the md5 across the
-    # num_hashes min() aggregates, so aggregating _mh_expr directly
-    # recomputes every md5 CHUNKS_PER_MD5 times (~25% slower measured)
+    # num_hashes min() aggregates, so aggregating each function's md5
+    # substring directly recomputes every md5 CHUNKS_PER_MD5 times
+    # (~25% slower measured)
     n_salts = (num_hashes + CHUNKS_PER_MD5 - 1) // CHUNKS_PER_MD5
     pre = sh.select(
         id_col,
@@ -206,7 +174,6 @@ def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fence: bool = True,
     max_bucket_size: int | None = None,
     stats: dict | None = None,
     **kw,
@@ -236,30 +203,14 @@ def lsh_candidate_pairs(
     be eager to warn loudly); ``None`` (default) keeps the exact
     uncapped semantics with zero extra work.
 
-    The band table is materialized once behind a checkpoint fence
-    (``fence=True``, default): the self-join otherwise re-evaluates the
-    whole shingle->md5->min pipeline on both sides (CollapseProject
-    inlining — 1.4 s vs 0.24 s measured at sf0.1).  Batch-only as a
-    result; release the fence storage with ``fence.fence_scope()`` /
-    ``release_fence`` after consuming the result, or pass
-    ``fence=False`` to keep pure lineage (streaming / fault-tolerant
-    callers) at the re-evaluation cost."""
-    bands = minhash_bands(df, text_col, id_col, **kw)
-    if fence:
-        bands = _fence(bands)
+    The band table is materialized once behind a checkpoint fence:
+    the self-join otherwise re-evaluates the whole shingle->md5->min
+    pipeline on both sides (CollapseProject inlining — 1.4 s vs 0.24 s
+    measured at sf0.1).  Batch-only as a result; release the fence
+    storage with ``fence.fence_scope()`` / ``release_fence`` after
+    consuming the result."""
+    bands = fence(minhash_bands(df, text_col, id_col, **kw))
     if max_bucket_size is not None:
-        if not fence:
-            # the cap's "one bounded driver action" claim requires a
-            # materialized band table: without this, the eager size
-            # aggregate below executes the whole shingle->md5->min
-            # pipeline at plan-BUILD time, and the un-fenced anti-join
-            # + self-join then re-evaluate it on every side (3-4x the
-            # module's most expensive stage).  Capped callers get a
-            # fence even under fence=False — release it with
-            # fence_scope()/release_fence like any other; a streaming
-            # foreachBatch caller holds a batch DataFrame, so
-            # localCheckpoint is legal there too.
-            bands = _fence(bands)
         sizes = bands.groupBy("band", "band_hash").agg(
             F.count("*").alias("_bsz")
         )
@@ -315,7 +266,6 @@ def lsh_star_edges(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fence: bool = True,
     **kw,
 ) -> DataFrame:
     """Mega-bucket-safe LSH output: per (band, band_hash) bucket emit
@@ -336,11 +286,8 @@ def lsh_star_edges(
     would silently explode on.  The band table is materialized once
     behind a checkpoint fence — the hub aggregation and the join
     back both reference it (same CollapseProject re-evaluation trap as
-    lsh_candidate_pairs; same lifetime story — see operators/fence.py,
-    ``fence=False`` opts out)."""
-    bands = minhash_bands(df, text_col, id_col, **kw)
-    if fence:
-        bands = _fence(bands)
+    lsh_candidate_pairs; same lifetime story — see operators/fence.py)."""
+    bands = fence(minhash_bands(df, text_col, id_col, **kw))
     hubs = bands.groupBy("band", "band_hash").agg(
         F.min(id_col).alias("_hub"), F.count("*").alias("bucket_size")
     )
@@ -375,19 +322,19 @@ def jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    fence: bool = True,
 ) -> DataFrame:
     """Exact k-shingle Jaccard for candidate pairs (verify stage after
     LSH).  Joins are broadcast-eligible when the candidate set is
     small; array_intersect/array_union stay JVM-side.  The shingle
     table is materialized once (checkpoint fence) — it is joined
     as both sides, and CollapseProject would otherwise re-shingle the
-    corpus twice (lifetime/opt-out story: operators/fence.py)."""
-    sh = df.select(
-        F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh")
+    corpus twice (lifetime story: operators/fence.py)."""
+    sh = fence(
+        df.select(
+            F.col(id_col),
+            F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
+        )
     )
-    if fence:
-        sh = _fence(sh)
     a = sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a")
     b = sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b")
     joined = pairs.join(a, "a").join(b, "b")
@@ -412,93 +359,6 @@ _NIBBLE_SETS = (
 )
 
 
-def _token_hexes(col: Column, bits: int) -> Column:
-    """Per-token md5 hex (32 nibbles serve up to 64 bits, 2 per nibble)."""
-    if bits > 64:
-        raise ValueError(f"simhash supports at most 64 bits, got {bits}")
-    return F.md5(col)
-
-
-def simhash(col: Column, bits: int = 16) -> Column:
-    """SimHash over whitespace tokens: bit j of the fingerprint is the
-    sign of sum over tokens of (+1 / -1).
-
-    Token bit j is defined as the high bit of md5 hex nibble j
-    (nibble >= '8'), which any md5-equipped engine reproduces — the
-    DuckDB oracle states the identical expression.  Single-bigint form
-    (bits <= 32); for the production 64-bit fingerprint use
-    ``simhash_table_wide``, which chunks the bits across columns to
-    bound both codegen'd expression size and the 2^j weight literals.
-
-    NULL/empty text maps to fingerprint 0 (an empty token stream has
-    no positive bit sums) — 0 therefore means "no signal", colliding
-    with any legitimately all-negative fingerprint; filter NULL texts
-    out first when 0 must stay unambiguous (``simhash_table_wide``
-    excludes them outright)."""
-    if bits > 32:
-        raise ValueError(
-            f"simhash single-bigint form supports <= 32 bits (got {bits}); "
-            f"use simhash_table_wide for wider fingerprints"
-        )
-    tokens = F.split(normalize_text(col), " ")
-    hexes = F.transform(tokens, lambda t: _token_hexes(t, bits))
-    return _simhash_bits(hexes, bits)
-
-
-def _simhash_bits(hexes: Column, bits: int, offset: int = 0) -> Column:
-    """Fingerprint of bits [offset, offset + bits) from a per-token
-    hex array column, weighted 2^(j - offset)."""
-    out = F.lit(0).cast("bigint")
-    for j in range(offset, offset + bits):
-        nibble_pos = (j % 32) + 1
-        nibble_set = _NIBBLE_SETS[j // 32]
-        # NB: the merge callable must stay exactly binary (acc, h) for
-        # pyspark's lambda-variable mapping; the loop locals are safe to
-        # close over because F.aggregate consumes the lambda within
-        # this iteration.
-        bit_sum = F.aggregate(
-            hexes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.substring(h, nibble_pos, 1).isin(*nibble_set),
-                1,
-            ).otherwise(-1),
-        )
-        out = out + F.when(
-            bit_sum > 0, F.lit(2 ** (j - offset)).cast("bigint")
-        ).otherwise(0)
-    return out
-
-
-def simhash_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-) -> DataFrame:
-    """(id, fingerprint) with the md5-hex array PROJECTED ONCE before
-    the per-bit aggregates.  The single-expression ``simhash`` column
-    embeds the token-hash subtree in every bit aggregate and Catalyst
-    does not eliminate it across them (~3.5x slower measured at
-    sf0.1); naming the array in its own projection hashes each token
-    exactly once.  Same values, same oracle.  Single-bigint form
-    (bits <= 32) — ``simhash_table_wide`` is the production-width path."""
-    if bits > 32:
-        raise ValueError(
-            f"simhash_table single-bigint form supports <= 32 bits "
-            f"(got {bits}); use simhash_table_wide"
-        )
-    tokens = F.split(normalize_text(F.col(text_col)), " ")
-    hx = df.select(
-        F.col(id_col),
-        F.transform(tokens, lambda t: _token_hexes(t, bits)).alias("_hexes"),
-    )
-    return hx.select(
-        id_col, _simhash_bits(F.col("_hexes"), bits).alias("fingerprint")
-    )
-
-
 def simhash_table_wide(
     df: DataFrame,
     text_col: str = "text",
@@ -514,8 +374,9 @@ def simhash_table_wide(
     chunked bigint columns (a) keeps each codegen'd projection bounded
     and (b) IS the Hamming-join blocking key: any pair within Hamming
     distance d differs in at most d chunks, so with d < n_chunks at
-    least one chunk matches exactly (pigeonhole) — ``simhash_pairs_64``
-    unions one equi-join per chunk for full recall at distance <= 3.
+    least one chunk matches exactly (pigeonhole) —
+    ``simhash_hamming_pairs`` unions one equi-join per chunk for full
+    recall at distance <= 3.
     The token-hex array is projected once; each chunk's per-bit
     aggregates read their own nibble range.
 
@@ -525,13 +386,16 @@ def simhash_table_wide(
     that the Hamming equi-join then dropped — hid those rows without
     any signal.  Route NULL texts through the exact-dedup operators
     (which group them deliberately) instead."""
+    if bits > 64:
+        # one md5 per token: 32 nibbles x 2 tested bits each
+        raise ValueError(f"simhash supports at most 64 bits, got {bits}")
     if bits % chunk_bits:
         raise ValueError(f"bits={bits} not divisible by chunk_bits={chunk_bits}")
     df = df.where(F.col(text_col).isNotNull())
     tokens = F.split(normalize_text(F.col(text_col)), " ")
     hx = df.select(
         F.col(id_col),
-        F.transform(tokens, lambda t: _token_hexes(t, bits)).alias("_hexes"),
+        F.transform(tokens, F.md5).alias("_hexes"),
     )
     # ONE pass over the token array builds all ``bits`` signed counts at
     # once (zip_with accumulator), instead of ``bits`` separate
@@ -573,14 +437,14 @@ def simhash_table_wide(
 def simhash_hamming_pairs(
     fp: DataFrame,
     id_col: str = "doc_id",
-    n_chunks: int = 4,
     max_hamming: int = 3,
-    fence: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (a, b, hamming) from a chunked fingerprint table
     (the output of ``simhash_table_wide``): one equi-join per chunk on
     (chunk_idx, chunk_value), unioned via a 2-cell explode, then exact
-    Hamming verify.  Pigeonhole guarantees FULL recall whenever
+    Hamming verify over EVERY ``fp<c>`` column of ``fp`` (the chunk
+    count is read from the table, so no chunk can be left out of the
+    distance).  Pigeonhole guarantees FULL recall whenever
     ``max_hamming < n_chunks`` (<= 3 differing bits across 4 chunks
     leave >= 1 chunk identical).  Every join is a hash join; shuffle
     is n_chunks x n rows, never n^2.
@@ -590,15 +454,15 @@ def simhash_hamming_pairs(
     CollapseProject inlines the fingerprint expressions into every
     chunk reference on both join sides (~16 re-evaluations of the
     whole bit pipeline — measured 13 s vs 0.9 s at sf0.1).  Batch-only
-    operator as a result (lifetime/opt-out story: operators/fence.py)."""
+    operator as a result (lifetime story: operators/fence.py)."""
+    n_chunks = sum(c.startswith("fp") and c[2:].isdigit() for c in fp.columns)
     if max_hamming >= n_chunks:
         raise ValueError(
-            f"max_hamming={max_hamming} needs n_chunks > max_hamming for "
-            f"pigeonhole recall (got {n_chunks})"
+            f"max_hamming={max_hamming} needs more fp<c> chunk columns "
+            f"than max_hamming for pigeonhole recall (got {n_chunks})"
         )
     chunks = [f"fp{c}" for c in range(n_chunks)]
-    if fence:
-        fp = _fence(fp)
+    fp = fence(fp)
     keyed = fp.select(
         F.col(id_col),
         *chunks,
@@ -645,7 +509,6 @@ def paragraph_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_paras_per_doc: int = 100_000,
-    fence: bool = True,
 ) -> DataFrame:
     """One row per non-empty paragraph with its canonical owner: the
     corpus-wide first occurrence — (min doc, then min position) — of
@@ -715,8 +578,7 @@ def paragraph_dedup(
     # paras feeds BOTH the owners aggregation and the join back —
     # materialize the explode+md5 once (same CollapseProject
     # re-evaluation trap as the LSH band table; ~40% at sf0.1)
-    if fence:
-        paras = _fence(paras)
+    paras = fence(paras)
     owners = paras.groupBy("para_hash").agg(
         F.min("_key").alias("_keep_key"),
         F.count("*").alias("dup_count"),
@@ -736,15 +598,14 @@ def strip_duplicate_paragraphs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_paras_per_doc: int = 100_000,
-    fence: bool = True,
 ) -> DataFrame:
     """Documents with corpus-duplicate paragraphs removed: keeps only
     each paragraph's canonical occurrence and reassembles the document
     (original paragraph text, original order, blank-line separators).
     Documents whose every paragraph was a later duplicate drop out."""
-    kept = paragraph_dedup(
-        df, text_col, id_col, max_paras_per_doc, fence=fence
-    ).where("is_canonical")
+    kept = paragraph_dedup(df, text_col, id_col, max_paras_per_doc).where(
+        "is_canonical"
+    )
     ordered = F.array_sort(
         F.collect_list(F.struct("para_idx", "para"))
     )
@@ -806,8 +667,6 @@ def substring_duplicate_spans(
     n: int = 20,
     min_count: int = 2,
     min_docs: int = 1,
-    fence: bool = True,
-    broadcast_dup: bool = True,
 ) -> DataFrame:
     """Exact substring (duplicated n-gram span) dedup, the
     suffix-array dedup of Lee et al. 2022 ("Deduplicating Training
@@ -830,30 +689,25 @@ def substring_duplicate_spans(
     of hot-spotting a task); when ``min_docs > 1`` it splits into a
     (gram, doc) layer then a (gram) layer — same combine property at
     both levels; the duplicated-gram set joins back to the
-    seed table as a BROADCAST hash join by default (it is bounded by
-    the distinct duplicated-gram count, not the corpus).  NOTE:
-    ``F.broadcast`` is an unconditional hint — it bypasses
-    ``autoBroadcastJoinThreshold``, so a corpus whose boilerplate
-    VOCABULARY itself exceeds executor memory (hundreds of millions
-    of distinct duplicated grams) must pass ``broadcast_dup=False``
-    to fall back to a shuffle equi-join (1:1 per seed either way, no
-    expansion); the
-    span merge is a per-document window bounded by document length.
-    The seed table feeds both the count and the join back, so it is
-    checkpoint-fenced once (``fence=False`` opts out for streaming /
-    fault-tolerant callers — see operators/fence.py for the
+    seed table as a BROADCAST hash join (it is bounded by the distinct
+    duplicated-gram count, not the corpus; 1:1 per seed, no
+    expansion).  NOTE: ``F.broadcast`` is an unconditional hint — it
+    bypasses ``autoBroadcastJoinThreshold``, so the duplicated-gram
+    VOCABULARY must fit executor memory (it stops fitting only at
+    hundreds of millions of distinct duplicated grams).  The span
+    merge is a per-document window bounded by document length.  The
+    seed table feeds both the count and the join back, so it is
+    checkpoint-fenced once (see operators/fence.py for the
     trade-off)."""
     from .intervals import merge_intervals
 
-    seeds = df.select(
-        F.col(id_col),
-        F.posexplode(_gram_hashes(F.col(text_col), n)).alias("_pos", "_gh"),
+    seeds = fence(
+        df.select(
+            F.col(id_col),
+            F.posexplode(_gram_hashes(F.col(text_col), n)).alias("_pos", "_gh"),
+        )
     )
-    if fence:
-        seeds = _fence(seeds)
-    dup = _dup_grams(seeds, id_col, min_count, min_docs)
-    if broadcast_dup:
-        dup = F.broadcast(dup)
+    dup = F.broadcast(_dup_grams(seeds, id_col, min_count, min_docs))
     hits = seeds.join(dup, "_gh").select(
         id_col,
         F.col("_pos").cast("bigint").alias("span_lo"),
@@ -871,8 +725,6 @@ def substring_dedup_stats(
     n: int = 20,
     min_count: int = 2,
     min_docs: int = 1,
-    fence: bool = True,
-    broadcast_dup: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-token accounting with
     ``substring_duplicate_spans`` semantics: (id, n_tokens,
@@ -889,7 +741,7 @@ def substring_dedup_stats(
     - carries ``n_tokens`` inside the seed table and uses
       ``posexplode_outer`` so zero-gram documents keep a sentinel row
       — no join back to the doc table at all;
-    - left-joins the (broadcast by default) duplicated-gram set as a
+    - left-joins the (broadcast) duplicated-gram set as a
       marker instead of an inner join, so one groupBy(id) collects
       the sorted dup-seed positions per document;
     - folds the merge_intervals recurrence (new island iff
@@ -908,20 +760,20 @@ def substring_dedup_stats(
         .otherwise(F.size(F.split(norm, " ")))
         .cast("bigint")
     )
-    seeds = df.select(
-        F.col(id_col),
-        n_tokens.alias("_nt"),
-        F.posexplode_outer(_gram_hashes(F.col(text_col), n)).alias(
-            "_pos", "_gh"
-        ),
+    seeds = fence(
+        df.select(
+            F.col(id_col),
+            n_tokens.alias("_nt"),
+            F.posexplode_outer(_gram_hashes(F.col(text_col), n)).alias(
+                "_pos", "_gh"
+            ),
+        )
     )
-    if fence:
-        seeds = _fence(seeds)
-    dup = _dup_grams(seeds, id_col, min_count, min_docs).withColumn(
-        "_dup", F.lit(True)
+    dup = F.broadcast(
+        _dup_grams(seeds, id_col, min_count, min_docs).withColumn(
+            "_dup", F.lit(True)
+        )
     )
-    if broadcast_dup:
-        dup = F.broadcast(dup)
     marked = seeds.join(dup, "_gh", "left")
     per_doc = marked.groupBy(id_col).agg(
         F.first("_nt").alias("n_tokens"),
@@ -975,8 +827,6 @@ def strip_duplicate_spans(
     n: int = 20,
     min_count: int = 2,
     min_docs: int = 1,
-    fence: bool = True,
-    broadcast_dup: bool = True,
 ) -> DataFrame:
     """Documents with every duplicated span removed (the paper's
     "drop both copies" policy — no global canonical-occurrence pick,
@@ -986,8 +836,7 @@ def strip_duplicate_spans(
     documents (every row is preserved — filtering is the caller's
     policy decision)."""
     spans = substring_duplicate_spans(
-        df, text_col, id_col, n, min_count, min_docs,
-        fence=fence, broadcast_dup=broadcast_dup,
+        df, text_col, id_col, n, min_count, min_docs
     )
     span_arrs = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_lo", "span_hi")).alias("_spans")
@@ -1055,7 +904,7 @@ def connected_components(
     labels = nodes.select("node", F.col("node").alias("comp"))
     # checkpoint truncates the lineage the iterative loop would
     # otherwise grow without bound (each round re-plans the previous)
-    sym = _fence(sym, eager=True)
+    sym = fence(sym, eager=True)
     converged = False
     prev = None
     for i in range(max_iter):
@@ -1092,7 +941,7 @@ def connected_components(
             F.least(F.col("comp"), cand).alias("comp"),
             (cand < F.col("comp")).alias("_changed"),
         )
-        ckpt = _fence(new_labels, eager=True)
+        ckpt = fence(new_labels, eager=True)
         changed = ckpt.where("_changed").limit(1).count()
         # the superseded round's checkpoint is dead once labels moves
         # on — genuinely release its blocks instead of retaining
@@ -1102,7 +951,7 @@ def connected_components(
         # free them through the Java RDD handle.  Verified: the former
         # unpersist() left every round's RDD in getPersistentRDDs.)
         if prev is not None:
-            _release_fence(prev)
+            release_fence(prev)
         prev = ckpt
         labels = ckpt.drop("_changed")
         if stats is not None:
@@ -1114,13 +963,13 @@ def connected_components(
     # the symmetrized edge table's blocks are dead weight once the loop
     # ends (the final checkpoint itself stays live for the caller; wrap
     # the call in fence_scope() to release it after consumption)
-    _release_fence(sym)
+    release_fence(sym)
     if not converged:
         # the caller gets no frame back on this path, so the final
         # round's checkpoint would otherwise leak with no release
         # handle — free it before raising
         if prev is not None:
-            _release_fence(prev)
+            release_fence(prev)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"(a component's diameter exceeds max_iter); raise max_iter — "
@@ -1135,7 +984,6 @@ def near_dup_dedup(
     id_col: str = "doc_id",
     jaccard_threshold: float = 0.8,
     max_iter: int = 20,
-    fence: bool = True,
     stats: dict | None = None,
     max_bucket_size: int | None = None,
     **lsh_kw,
@@ -1185,12 +1033,10 @@ def near_dup_dedup(
     operator matters) is fenced here, and the sub-operators fence
     their self-joined intermediates (band + shingle tables) — wrap
     the call in ``fence.fence_scope()`` to release those blocks after
-    consuming the result.  ``fence=False`` keeps pure lineage for the
-    exact-group/LSH stages ONLY: the connected-components closure
-    ALWAYS checkpoints per round regardless (iterative pointer
-    jumping without truncation grows an exponential plan — there is
-    no recomputable form), so even fence=False callers should use
-    ``fence_scope()`` to release the CC rounds' blocks."""
+    consuming the result, the connected-components closure's per-round
+    checkpoints included (iterative pointer jumping without
+    truncation grows an exponential plan — there is no recomputable
+    form)."""
     k = lsh_kw.get("k", 3)
     # NULL-safe group key: md5(NULL) is NULL, and a NULL key would
     # survive the groupBy but never match the equi-join below — the
@@ -1213,8 +1059,7 @@ def near_dup_dedup(
         F.min(id_col).alias("_keep"),
         F.min_by(text_col, id_col).alias("_ktext"),
     )
-    if fence:
-        groups = _fence(groups)
+    groups = fence(groups)
     # (doc, canonical-of-its-exact-group); the join key is the 32-hex
     # text hash with ONE build row per key, so even a 10^6-member
     # exact group is a streaming probe, not an explosion
@@ -1228,14 +1073,11 @@ def near_dup_dedup(
         canon,
         text_col,
         id_col,
-        fence=fence,
         max_bucket_size=max_bucket_size,
         stats=stats,
         **lsh_kw,
     )
-    verified = jaccard_pairs(
-        canon, pairs, text_col, id_col, k=k, fence=fence
-    ).where(F.col("jaccard") >= jaccard_threshold)
+    verified = jaccard_pairs(canon, pairs, text_col, id_col, k=k).where(F.col("jaccard") >= jaccard_threshold)
     comp = connected_components(
         verified, "a", "b", max_iter=max_iter, stats=stats
     ).select(F.col("node").alias("_keep"), F.col("comp").alias("_comp"))

@@ -31,8 +31,7 @@ Caveats (inherited from localCheckpoint itself, documented once here):
 the fenced frame is batch-only (checkpointing needs a live driver) and
 an executor loss makes its blocks unrecoverable — the job fails instead
 of recomputing.  That trade was measured worthwhile for self-joined
-intermediates; callers who need streaming or fault-tolerant lineage can
-pass ``fence=False`` on the operators that take it.
+intermediates.
 
 Checkpoint-id discovery diffs ``sc.getPersistentRDDs`` around the
 ``localCheckpoint`` call (the RDD registers at CALL time even for lazy

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dedup import _md5_int, normalize_text
+from .dedup import normalize_text
 
 # A compact high-frequency English function-word set for language ID
 # (subset of the reference's stopword list, data/stopwords.txt).
@@ -87,14 +87,18 @@ def quality_score(col: Column) -> Column:
 
 
 def char_shingle_fingerprint(col: Column, k: int = 8) -> Column:
-    """Document fingerprint: min md5-int over k-char shingles of the
-    normalized text (winnowing-style rolling-hash min).  Stable and
-    SQL-reproducible."""
+    """Document fingerprint: min over k-char shingles of the normalized
+    text of the shingle's 12-hex md5 prefix (winnowing-style
+    rolling-hash min).  Fixed-width lowercase hex compares
+    lexicographically == numerically, so the string min is the
+    numeric min — stable and SQL-reproducible (any engine with md5)."""
     t = normalize_text(col)
     n = F.length(t)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     shingles = F.transform(idx, lambda i: F.substring(t, i, k))
-    return F.array_min(F.transform(shingles, _md5_int))
+    return F.array_min(
+        F.transform(shingles, lambda s: F.substring(F.md5(s), 1, 12))
+    )
 
 
 LANG_FUNCTION_WORDS = {

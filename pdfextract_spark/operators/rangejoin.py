@@ -70,7 +70,6 @@ def interval_join(
     b_hi: str = "hi",
     cell_width: float | None = None,
     tune_sample_fraction: float | None = None,
-    prefer_shuffle_hash: bool = False,
 ) -> DataFrame:
     """Inner join of ``a`` × ``b`` on equal ``on`` keys and closed-
     interval overlap ``a_lo <= b_hi AND b_lo <= a_hi``.
@@ -81,15 +80,12 @@ def interval_join(
     (default) derives the grid size from the sampled median interval
     length (``auto_cell_width``) instead of trusting a constant.
 
-    ``prefer_shuffle_hash`` (default False — Spark's own size-based
-    join selection, including auto-broadcast of a tiny side, stays in
-    charge) optionally hints the ``a`` side as a ShuffledHashJoin
-    build: when BOTH exploded sides are large, sorting them for a
+    The exploded ``a`` side is always hinted as a ShuffledHashJoin
+    build: when both exploded sides are large, sorting them for a
     sort-merge join is the dominant cost of the grid join (3.2 s vs
-    0.9 s measured at sf0.1) and buys nothing — the bench/driver j1
-    path passes True for exactly that reason.  Two caveats the hint
-    carries (why it is opt-in): (1) a build TASK holds its whole
-    shuffle partition — all (keys, cell) groups hashed to it, roughly
+    0.9 s measured at sf0.1) and buys nothing.  Two caveats the hint
+    carries: (1) a build TASK holds its whole shuffle partition — all
+    (keys, cell) groups hashed to it, roughly
     |exploded a| / shuffle-partitions rows — so size
     ``spark.sql.shuffle.partitions`` for the ``a`` side (the hash
     build does not spill the way sort-merge does); (2) the hint
@@ -120,10 +116,10 @@ def interval_join(
             f"interval_join uses as its internal grid-cell name; "
             f"rename it before calling"
         )
-    ae = a.withColumn("_cell", F.explode(_cells(F.col(a_lo), F.col(a_hi), cell_width)))
+    ae = a.withColumn(
+        "_cell", F.explode(_cells(F.col(a_lo), F.col(a_hi), cell_width))
+    ).hint("shuffle_hash")
     be = b.withColumn("_cell", F.explode(_cells(F.col(b_lo), F.col(b_hi), cell_width)))
-    if prefer_shuffle_hash:
-        ae = ae.hint("shuffle_hash")
     joined = ae.join(be, [*on, "_cell"])
     overlap = (F.col(a_lo) <= F.col(b_hi)) & (F.col(b_lo) <= F.col(a_hi))
     canonical = F.col("_cell") == F.floor(

@@ -10,8 +10,7 @@ Everything is Catalyst-native: tokenize/explode in the scan
 projection, per-(doc, term) counts as ONE map-side-combinable
 aggregation (checkpoint-fenced — every downstream relation, document
 lengths included, derives from the counted table, so the corpus is
-tokenized exactly once per call; ``fence=False`` opts out for
-streaming / fault-tolerant callers, see operators/fence.py), and the
+tokenized exactly once per call; see operators/fence.py), and the
 corpus-level scalars (N, avgdl) carried as broadcast single-row
 frames — never a driver-side collect, so the operators stay lazy and
 composable.
@@ -30,11 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import normalize_text
-from .fence import fence as _fence
+from .fence import fence
 
 
 def _term_counts(
-    df: DataFrame, text_col: str, id_col: str, fence: bool
+    df: DataFrame, text_col: str, id_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """(per_doc, dl): the fenced (id, term, tf) count table and the
     per-document token length DERIVED from it (dl = sum of tf), so
@@ -47,11 +46,11 @@ def _term_counts(
             F.when(norm == "", F.array()).otherwise(F.split(norm, " "))
         ).alias("term"),
     )
-    per_doc = toks.groupBy(id_col, "term").agg(
-        F.count("*").cast("bigint").alias("tf")
+    per_doc = fence(
+        toks.groupBy(id_col, "term").agg(
+            F.count("*").cast("bigint").alias("tf")
+        )
     )
-    if fence:
-        per_doc = _fence(per_doc)
     dl = per_doc.groupBy(id_col).agg(
         F.sum("tf").cast("bigint").alias("dl")
     )
@@ -62,11 +61,10 @@ def doc_terms(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fence: bool = True,
 ) -> DataFrame:
     """(id, term, tf, dl): per-document term counts plus the document
     length in tokens — the base relation for TF-IDF and BM25."""
-    per_doc, dl = _term_counts(df, text_col, id_col, fence)
+    per_doc, dl = _term_counts(df, text_col, id_col)
     return per_doc.join(dl, id_col)
 
 
@@ -74,13 +72,12 @@ def tf_idf(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fence: bool = True,
 ) -> DataFrame:
     """(id, term, tf, df_t, tfidf): smoothed TF-IDF —
     ``tf * ln((N + 1) / (df_t + 1))`` with N the corpus document
     count.  N rides along as a broadcast single-row frame, so the
     operator is lazy end-to-end."""
-    per_doc, _ = _term_counts(df, text_col, id_col, fence)
+    per_doc, _ = _term_counts(df, text_col, id_col)
     n_docs = df.agg(F.count("*").cast("bigint").alias("_n"))
     dfreq = per_doc.groupBy("term").agg(
         F.count("*").cast("bigint").alias("df_t")
@@ -108,7 +105,6 @@ def bm25_scores(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    fence: bool = True,
 ) -> DataFrame:
     """(id, bm25): Okapi BM25 of every document containing at least
     one query term, with the non-negative idf variant
@@ -171,7 +167,7 @@ def bm25_scores(
         )
     else:
         qtf_weight = F.lit(1.0)
-    per_doc, dl = _term_counts(df, text_col, id_col, fence)
+    per_doc, dl = _term_counts(df, text_col, id_col)
     matched = per_doc.where(F.col("term").isin(terms))
     hits = matched.join(dl, id_col)
     dfreq = matched.groupBy("term").agg(

@@ -102,13 +102,14 @@ _GRADE_PRIORITY = [
     "dedup_substring_spans",
     "dedup_substring_strip", "scrub_pii", "text_bm25",
     "sketch_count_min", "sketch_bloom",
-    "p10_j2_containment_join", "j3_scanline_incidence",
+    "j1_interval_join", "p10_j2_containment_join",
+    "j3_scanline_incidence",
     "a2_islands_sessionize", "a4_interval_union_stats",
-    "dedup_simhash", "lang_id_en",
+    "dedup_simhash", "dedup_simhash_pairs", "lang_id_en",
     "quality_score", "fingerprint_minshingle",
     "ann_cosine_topk", "boilerplate_strip", "pipeline_zones",
-    "a3_overlap_merge", "w8_collapse_order", "multimodal_features",
-    "ann_cosine_topk_ivf", "p4_p6_section_flags", "f12_margin_split",
+    "a3_overlap_merge", "multimodal_features",
+    "ann_cosine_topk_ivf", "p4_p6_section_flags",
     "j4_zone_assembly", "pipeline_conv_rollup",
     "multimodal_frame_sample", "lang_id_multi",
     "j5_resolve_catalog_join", "decontaminate_ngram",

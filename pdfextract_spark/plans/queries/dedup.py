@@ -255,16 +255,15 @@ def dedup_ngram_jaccard(spark, sf_dir):
 )
 def fingerprint_minshingle(spark, sf_dir):
     """Winnowing-style document fingerprint: min md5 prefix over 8-char
-    shingles of normalized text (rolling-hash min, engine-portable)."""
+    shingles of normalized text (rolling-hash min, engine-portable),
+    for documents whose normalized text holds at least one shingle."""
+    from ...operators.quality import char_shingle_fingerprint
+
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
-    t = docs.select(
-        "doc_id", dedup.normalize_text(F.col("text")).alias("s")
-    ).where(F.length("s") >= 8)
-    idx = F.sequence(F.lit(1), F.length("s") - 7)
-    fp = F.array_min(
-        F.transform(idx, lambda i: F.substring(F.md5(F.col("s").substr(i, F.lit(8))), 1, 12))
+    fp = char_shingle_fingerprint(F.col("text"), k=8)
+    return docs.where(F.length(dedup.normalize_text(F.col("text"))) >= 8).select(
+        "doc_id", fp.alias("fingerprint")
     )
-    return t.select("doc_id", fp.alias("fingerprint"))
 
 
 @q(
@@ -349,7 +348,7 @@ def dedup_simhash_pairs(spark, sf_dir):
     a hash join (the oracle states the same blocking as an OR)."""
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     fp = dedup.simhash_table_wide(docs, bits=64, chunk_bits=16)
-    return dedup.simhash_hamming_pairs(fp, n_chunks=4, max_hamming=3)
+    return dedup.simhash_hamming_pairs(fp, max_hamming=3)
 
 
 _CC_CORPUS_SQL = """

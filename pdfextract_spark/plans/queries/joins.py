@@ -122,11 +122,7 @@ def j1_interval_join(spark, sf_dir):
         (F.col("l_partkey") % 1000 + 3 + F.col("l_suppkey") % 10).alias("b_hi"),
     )
     pairs = interval_join(
-        a, b, ["page"], a_lo="a_lo", a_hi="a_hi", b_lo="b_lo", b_hi="b_hi",
-        # both exploded sides are large here: skip the sort-merge sort
-        # (3x measured; the hint is opt-in because it preempts
-        # auto-broadcast for tiny sides — rangejoin.py docstring)
-        prefer_shuffle_hash=True,
+        a, b, ["page"], a_lo="a_lo", a_hi="a_hi", b_lo="b_lo", b_hi="b_hi"
     )
     return pairs.groupBy("page").agg(
         F.count("*").alias("n_pairs"),

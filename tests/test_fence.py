@@ -96,19 +96,6 @@ def test_fence_scope_nests(spark):
     assert not (_ids(spark) - base)
 
 
-def test_fence_false_opts_out_of_checkpointing(spark):
-    base = _ids(spark)
-    rows = [(i, f"doc {i} alpha beta gamma delta") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    dedup.lsh_candidate_pairs(df, num_hashes=8, band_size=4, fence=False).count()
-    dedup.jaccard_pairs(
-        df,
-        spark.createDataFrame([(1, 2)], "a bigint, b bigint"),
-        fence=False,
-    ).count()
-    assert not (_ids(spark) - base)
-
-
 def test_connected_components_releases_round_storage(spark):
     """The iterative loop must not retain one checkpoint per round: at
     most the FINAL round's labels may stay persisted on return (the

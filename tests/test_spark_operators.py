@@ -122,12 +122,13 @@ def test_simhash_near_dup_low_hamming(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, other)], "doc_id bigint, text string"
     )
-    out = {r["doc_id"]: r["h"] for r in df.select(
-        "doc_id", dedup.simhash(F.col("text"), 16).alias("h")
-    ).collect()}
+    out = {
+        r["doc_id"]: (r["fp0"], r["fp1"], r["fp2"], r["fp3"])
+        for r in dedup.simhash_table_wide(df, bits=64, chunk_bits=16).collect()
+    }
 
     def ham(a, b):
-        return bin(a ^ b).count("1")
+        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
     assert ham(out[1], out[2]) <= ham(out[1], out[3])
 
@@ -971,39 +972,16 @@ def test_count_min_sketch_properties(spark):
     a = {(r["depth"], r["bucket"]): r["cnt"] for r in merged.collect()}
     b = {(r["depth"], r["bucket"]): r["cnt"] for r in sk.collect()}
     assert a == b
-    # the distinct-item pre-aggregation path (default) and the raw
-    # stream-hashing path build bit-identical sketches — cell counts
-    # are sums of occurrence weights either way
-    raw = cms_build(df, "term", depth=4, width=64, pre_aggregate=False)
-    c = {(r["depth"], r["bucket"]): r["cnt"] for r in raw.collect()}
-    assert c == b
-    # and a pre-weighted input (weight_col) is the same sketch again
-    tw = df.groupBy("term").agg(F.count("*").alias("w"))
-    ww = cms_build(tw, "term", depth=4, width=64, weight_col="w")
-    d = {(r["depth"], r["bucket"]): r["cnt"] for r in ww.collect()}
-    assert d == b
 
 
 def test_minhash_signature_and_fingerprint_columns(spark):
-    """The column-level conveniences agree with their table-level /
-    query forms: minhash_signature's per-function minima equal
-    minhash_bands' aggregated mins, and char_shingle_fingerprint is
-    the md5-int min over k-char shingles."""
+    """char_shingle_fingerprint is the minimum 12-hex md5 prefix over
+    the k-char shingles of the normalized text: the string min equals
+    the numeric min of the prefixes read as integers."""
     df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
+        [(1, "The  quick brown fox jumps over the lazy dog ")],
         "doc_id bigint, text string",
     )
-    sig = df.select(
-        dedup.minhash_signature(F.col("text"), num_hashes=8, k=3).alias("s")
-    ).head()["s"]
-    sh = df.select(
-        "doc_id", F.explode(dedup.word_shingles(F.col("text"), 3)).alias("sh")
-    )
-    want = [
-        sh.agg(F.min(dedup._mh_expr(s, F.col("sh")))).head()[0]
-        for s in range(8)
-    ]
-    assert sig == want
     fp = df.select(
         Q.char_shingle_fingerprint(F.col("text"), k=8).alias("f")
     ).head()["f"]
@@ -1014,28 +992,7 @@ def test_minhash_signature_and_fingerprint_columns(spark):
         int(hashlib.md5(norm[i : i + 8].encode()).hexdigest()[:12], 16)
         for i in range(len(norm) - 7)
     )
-    assert fp == mins
-
-
-def test_simhash_wide_matches_narrow_chunks(spark):
-    """simhash_table_wide's chunk columns reassemble to the same bits
-    the single-bigint form computes (shared bit definition)."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, "one two three")],
-        "doc_id bigint, text string",
-    )
-    wide = {
-        r["doc_id"]: (r["fp0"], r["fp1"], r["fp2"], r["fp3"])
-        for r in dedup.simhash_table_wide(df, bits=64, chunk_bits=16).collect()
-    }
-    lo32 = {
-        r["doc_id"]: r["fingerprint"]
-        for r in dedup.simhash_table(df, bits=32).collect()
-    }
-    for d, (f0, f1, _f2, _f3) in wide.items():
-        assert f0 + (f1 << 16) == lo32[d]
-        for f in wide[d]:
-            assert 0 <= f < 2**16
+    assert fp == format(mins, "012x")
 
 
 def test_simhash_hamming_pairs_full_recall(spark):
@@ -1048,7 +1005,7 @@ def test_simhash_hamming_pairs_full_recall(spark):
     fp = dedup.simhash_table_wide(df, bits=64, chunk_bits=16)
     got = {
         (r["a"], r["b"]): r["hamming"]
-        for r in dedup.simhash_hamming_pairs(fp, n_chunks=4, max_hamming=3).collect()
+        for r in dedup.simhash_hamming_pairs(fp, max_hamming=3).collect()
     }
     by_id = {
         r["doc_id"]: (r["fp0"], r["fp1"], r["fp2"], r["fp3"])
@@ -1066,6 +1023,38 @@ def test_simhash_hamming_pairs_full_recall(spark):
     }
     assert got == want
     assert (1, 2) in got  # the planted near-dup survives at 64 bits
+
+
+def test_simhash_hamming_pairs_reads_every_chunk(spark):
+    """The Hamming distance covers every fp<c> column of the input, not
+    a fixed four: eight 8-bit chunks where doc 3 differs from doc 1 in
+    16 bits of fp4/fp5 and doc 2 differs from doc 1 in 2 bits of fp6
+    give (1, 2, 2) only.  Too few chunks for pigeonhole recall is
+    refused."""
+    chunks = [f"fp{c}" for c in range(8)]
+    rows = [
+        (1, *[0] * 8),
+        (2, *[0] * 6, 0b11, 0),
+        (3, *[0] * 4, 255, 255, 0, 0),
+    ]
+    fp = spark.createDataFrame(
+        rows, "doc_id bigint, " + ", ".join(f"{c} bigint" for c in chunks)
+    )
+    got = {
+        (r["a"], r["b"], r["hamming"])
+        for r in dedup.simhash_hamming_pairs(fp, max_hamming=3).collect()
+    }
+    assert got == {(1, 2, 2)}
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dedup.simhash_hamming_pairs(fp.select("doc_id", "fp0", "fp1"))
+
+
+def test_simhash_table_wide_refuses_over_64_bits(spark):
+    """One md5 per token serves at most 64 fingerprint bits (two per
+    hex nibble); a wider request is refused, not silently truncated."""
+    df = spark.createDataFrame([(1, "alpha beta")], "doc_id bigint, text string")
+    with pytest.raises(ValueError, match="at most 64 bits"):
+        dedup.simhash_table_wide(df, bits=128)
 
 
 def test_lsh_star_edges_linear_in_mega_bucket(spark):
@@ -1991,7 +1980,7 @@ def test_paragraph_dedup_handles_crlf_blank_lines(spark):
         ],
         "doc_id long, text string",
     )
-    rows = paragraph_dedup(df, fence=False).collect()
+    rows = paragraph_dedup(df).collect()
     shared = [r for r in rows if r["para"].strip() == "shared boilerplate"]
     assert len(shared) == 2 and sum(r["dup_count"] for r in shared) == 4
     assert sum(1 for r in shared if r["is_canonical"]) == 1

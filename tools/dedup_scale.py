@@ -200,14 +200,15 @@ def _run_retrieval(spark, corpus, n_docs, mult, cores, sf_dir) -> None:
     from pdfextract_spark.operators.fence import fence_scope
 
     base = corpus.where(F.col("doc_id") < 10_000_000)
-    top = (
-        retrieval.doc_terms(base, fence=False)
-        .groupBy("term")
-        .agg(F.count("*").alias("df_t"))
-        .orderBy(F.desc("df_t"), "term")
-        .limit(5)
-        .collect()
-    )
+    with fence_scope():
+        top = (
+            retrieval.doc_terms(base)
+            .groupBy("term")
+            .agg(F.count("*").alias("df_t"))
+            .orderBy(F.desc("df_t"), "term")
+            .limit(5)
+            .collect()
+        )
     terms = [r["term"] for r in top] + ["mirror"]
     n_even = corpus.where(
         (F.col("doc_id") >= 10_000_000)
