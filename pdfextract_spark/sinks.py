@@ -7,13 +7,15 @@ snapshot):
 - the turn keyspace is split into ``n_buckets`` stable buckets via
   pmod(xxhash64(conv_id, turn_idx), n); output is parquet partitioned
   by ``bucket``
-- the job runs in batches of buckets.  Each batch is ONE output write
-  (dynamic partition overwrite) that carries the batch's per-bucket
-  lineage sums as observed metrics (``DataFrame.observe``), then ONE
-  append of a lineage row per scheduled bucket to ``<out>/_lineage``
-  — rows/chars/regions/sections/refs/errored turns, the ``n_buckets``
-  pin and a commit time.  The lineage append is the batch's commit
-  marker: it is written only after the output write succeeded.
+- the job runs in batches of buckets, two in flight at a time.  Each
+  batch is ONE Spark job: the output write (dynamic partition
+  overwrite), which carries the batch's per-bucket lineage sums as
+  observed metrics (``DataFrame.observe``).  The driver then commits
+  the batch's lineage rows, one per scheduled bucket, as ONE parquet
+  file under ``<out>/_lineage`` — rows/chars/regions/sections/refs/
+  errored turns, the ``n_buckets`` pin and a commit time.  That file
+  is the batch's commit marker: it is written only after the output
+  write succeeded, and appears by an atomic rename.
 - ``resume=True`` processes only buckets without a committed lineage
   row; rerunning a partially-failed job is idempotent (the overwrite
   replaces any partial bucket output).  ``resume=False`` deletes the
@@ -23,6 +25,7 @@ snapshot):
 from __future__ import annotations
 
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +34,10 @@ from .plans.extract import extract
 from .settings import DEFAULT, Settings
 
 LINEAGE_SUBDIR = "_lineage"
+# batches of one job running at once: the second hides the first's
+# planning and commit; more measured no faster and widen the loss on a
+# crash
+_IN_FLIGHT = 2
 # one row per committed bucket; the counts are over its output rows,
 # the middle ones sums of the output's ``metrics`` struct fields
 _METRIC_SUMS = (
@@ -54,12 +61,10 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Stable bucket from (conv_id, turn_idx) — with the hash inputs
     pinned to (string, int) FIRST: xxhash64 of the same value under a
     different type is a different hash (int 5 vs bigint 5 land in
-    different buckets, verified), and this function is applied both
-    to the INPUT for scheduling and to the extraction OUTPUT (whose
-    turn_idx is int32) for the partition write — an input arriving
-    with a bigint turn_idx would otherwise write rows into OTHER
-    batches' partitions, which later batches then overwrite (silent
-    data loss) while lineage undercounts."""
+    different buckets, verified), so the same turns keyed by int or
+    bigint ``turn_idx`` get the same bucket ids.  The job hashes its
+    INPUT once, for scheduling, and carries that bucket through
+    extraction to the partition write; the output is not re-hashed."""
     return df.withColumn(
         "bucket",
         F.pmod(
@@ -127,6 +132,33 @@ def _lineage_metrics(batch: list[int]) -> list[Column]:
     return exprs
 
 
+def _commit_lineage(spark: SparkSession, lineage_dir: str, table) -> None:
+    """Commit one batch's lineage rows (a pyarrow Table) as ONE parquet
+    file, written from the driver: a hidden ``.part-<uuid>.parquet``
+    that is then renamed to ``part-<uuid>.parquet``.  Readers skip
+    hidden files, so a crash mid-write leaves no half-written commit,
+    and no Spark job is run.  The rename is the commit point."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .ioutil import hadoop_fs
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    name = f"part-{uuid.uuid4()}.parquet"
+    fs, tmp = hadoop_fs(spark, f"{lineage_dir}/.{name}")
+    final = hadoop_fs(spark, f"{lineage_dir}/{name}")[1]
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not commit lineage file {tmp} as {final}")
+
+
 def run_extraction_job(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -141,82 +173,103 @@ def run_extraction_job(
     """Extract all (remaining) buckets in batches and return the
     lineage table.
 
-    Each batch of ``buckets_per_batch`` buckets costs two Spark jobs:
-    1. the output write, partitioned by ``bucket`` with dynamic
-       partition overwrite, which observes the per-bucket lineage
-       counts while it writes (``DataFrame.observe``).  The counts
-       are aggregated in the write's result stage, whose task updates
-       Spark applies once per partition even when a task is retried,
-       so they are exact.  The output is read once, by this write, so
-       nothing is persisted;
-    2. the append of one lineage row per scheduled bucket — zeros for
-       a bucket with no input rows, which must still commit or resume
-       would reprocess it forever.  This append is the commit marker.
+    Each batch of ``buckets_per_batch`` buckets is one Spark job: the
+    output write, partitioned by ``bucket`` with dynamic partition
+    overwrite (a writer option; the session's setting is never
+    touched), which observes the per-bucket lineage counts while it
+    writes (``DataFrame.observe``).  The counts are aggregated in the
+    write's result stage, whose task updates Spark applies once per
+    partition even when a task is retried, so they are exact.  The
+    output is read once, by this write, so nothing is persisted.  Once
+    the write and its observation succeed, the driver commits one
+    lineage row per scheduled bucket as one parquet file — zeros for a
+    bucket with no input rows, which must still commit or resume would
+    reprocess it forever.  That file is the batch's commit marker.
+
+    Two batches are in flight at a time, so one batch's planning and
+    commit overlap the other's write.  Batch threads inherit the
+    caller's job group, description and tags.  After the first failed
+    batch nothing more is submitted; the other batch in flight runs to
+    its end (and commits if it succeeds), then the failure is raised.
 
     Batches bound the blast radius of a failure: a crash loses at most
-    one uncommitted batch, and ``resume=True`` picks up from the last
-    committed lineage row.  ``resume=False`` deletes the existing
+    two uncommitted batches, and ``resume=True`` picks up from the
+    committed lineage rows.  ``resume=False`` deletes the existing
     lineage and ``bucket=*`` partitions first.  ``on_error`` and
     ``want`` are passed to ``extract``; under ``on_error="skip"`` a
     bucket's ``turns_errored`` counts its sentinel rows.
     """
-    from .ioutil import delete_children, delete_path, local_frame
+    import pyarrow as pa
+    from pyspark import inheritable_thread_target
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    # per-job override, restored afterwards — permanently flipping the
-    # session's overwrite semantics would change unrelated later writes
-    _OVR = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(_OVR, None)
-    spark.conf.set(_OVR, "dynamic")
+    from .ioutil import delete_children, delete_path
+
     lineage_dir = f"{out_dir}/{LINEAGE_SUBDIR}"
-    try:
-        src = with_bucket(transcripts, n_buckets)
+    # required (NOT NULL) columns stay required in the written footer
+    lineage_arrow = to_arrow_schema(StructType.fromDDL(LINEAGE_DDL))
+    src = with_bucket(transcripts, n_buckets)
 
-        if resume:
-            done = completed_buckets(spark, out_dir, n_buckets)
-        else:
-            # a full reprocess starts from an EMPTY table: lineage
-            # appends per batch (a second generation would double every
-            # sum), and the dynamic overwrite only replaces partitions
-            # the rerun writes — a bucket that is empty now, or beyond
-            # a smaller n_buckets, would keep the old generation's rows
-            delete_path(spark, lineage_dir)
-            delete_children(spark, out_dir, "bucket=")
-            done = set()
-        todo = [b for b in range(n_buckets) if b not in done]
+    if resume:
+        done = completed_buckets(spark, out_dir, n_buckets)
+    else:
+        # a full reprocess starts from an EMPTY table: lineage
+        # accumulates per batch (a second generation would double every
+        # sum), and the dynamic overwrite only replaces partitions the
+        # rerun writes — a bucket that is empty now, or beyond a
+        # smaller n_buckets, would keep the old generation's rows
+        delete_path(spark, lineage_dir)
+        delete_children(spark, out_dir, "bucket=")
+        done = set()
+    todo = [b for b in range(n_buckets) if b not in done]
 
+    def run_batch(batch: list[int]) -> None:
+        result = extract(
+            src.where(F.col("bucket").isin(batch)),
+            settings,
+            on_error=on_error,
+            want=want,
+            carry=("bucket",),
+        )
+        seen = Observation()
+        result.observe(seen, *_lineage_metrics(batch)).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(out_dir)
+        got = seen.get
+        committed_at = time.time()
+        rows = [
+            {
+                "bucket": b,
+                **{c: got[f"b{b}"][c] or 0 for c in LINEAGE_COUNTS},
+                "n_buckets": n_buckets,
+                "committed_at": committed_at,
+            }
+            for b in batch
+        ]
+        _commit_lineage(
+            spark, lineage_dir, pa.Table.from_pylist(rows, lineage_arrow)
+        )
+
+    futures, running = [], set()
+    with ThreadPoolExecutor(_IN_FLIGHT) as pool:
         for i in range(0, len(todo), buckets_per_batch):
-            batch = todo[i : i + buckets_per_batch]
-            # the bucket is recomputed from the same hash instead of
-            # joined back: extraction keeps (conv_id, turn_idx), so it
-            # is a pure projection and the write stays shuffle-free
-            result = with_bucket(
-                extract(
-                    src.where(F.col("bucket").isin(batch)),
-                    settings,
-                    on_error=on_error,
-                    want=want,
-                ),
-                n_buckets,
+            if len(running) == _IN_FLIGHT:
+                finished, running = wait(running, return_when=FIRST_COMPLETED)
+                if any(f.exception() for f in finished):
+                    break
+            # wrapped per batch: each batch gets its own copy of the
+            # caller's local properties, which a Spark job mutates
+            target = inheritable_thread_target(spark)(run_batch)
+            futures.append(
+                pool.submit(target, todo[i : i + buckets_per_batch])
             )
-            seen = Observation()
-            result.observe(seen, *_lineage_metrics(batch)).write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(out_dir)
-            got = seen.get
-            committed_at = time.time()
-            rows = [
-                (b, *(got[f"b{b}"][c] or 0 for c in LINEAGE_COUNTS),
-                 n_buckets, committed_at)
-                for b in batch
-            ]
-            local_frame(spark, rows, LINEAGE_DDL).write.mode(
-                "append"
-            ).parquet(lineage_dir)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(_OVR)
-        else:
-            spark.conf.set(_OVR, prev_mode)
+            running.add(futures[-1])
+    # leaving the pool waited for every batch still in flight
+    for f in futures:
+        f.result()
 
     # the declared schema, not an inferred one: inference is a Spark
     # job, and lineage written before a column was added (e.g.

@@ -165,7 +165,7 @@ def test_resumable_sink_and_lineage(spark, tmp_path):
     # zero-filled — or resume could never converge to a no-op
     assert lineage.count() == 4
     assert completed_buckets(spark, out_dir) == {0, 1, 2, 3}
-    # the per-job overwrite-mode override is restored afterwards
+    # the overwrite mode is set on the writer; the session's is untouched
     assert (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
         == prev_ovr
@@ -591,12 +591,10 @@ def test_extract_rejects_unknown_want(spark):
 
 
 def test_with_bucket_type_stable(spark):
-    """The bucket hash is applied to the INPUT for scheduling and to
-    the extraction OUTPUT (int32 turn_idx) for the partition write;
-    xxhash64 of the same value under a different integer width is a
-    DIFFERENT hash, so a bigint input used to land rows in other
-    batches' partitions (overwritten later — silent data loss).  The
-    hash inputs are now pinned to (string, int) first."""
+    """xxhash64 of the same value under a different integer width is
+    a DIFFERENT hash, so without the (string, int) pin on the hash
+    inputs a bigint-keyed input would bucket its turns differently
+    from the int32 ``turn_idx`` of the extraction output."""
     from pdfextract_spark.sinks import with_bucket
 
     as_int = spark.createDataFrame(
@@ -708,10 +706,12 @@ def test_job_lineage_matches_output(spark, tmp_path):
     assert 0 in {r["rows_out"] for r in got.values()}
 
 
-def test_job_runs_two_spark_jobs_per_batch(spark, tmp_path):
-    """A fresh 16-bucket job in batches of 4 runs two Spark jobs per
-    batch, the output write and the lineage append: an aggregation
-    job, a join or an inferred-schema read would exceed the count."""
+def test_job_runs_one_spark_job_per_batch(spark, tmp_path):
+    """A fresh 16-bucket job in batches of 4 runs one Spark job per
+    batch, the output write; the lineage is committed from the driver.
+    A Spark lineage append, an aggregation job or an inferred-schema
+    read would exceed the count, and batch threads that lost the
+    caller's job group would fall short of it."""
     import uuid
 
     from pdfextract_spark.sinks import run_extraction_job
@@ -728,7 +728,92 @@ def test_job_runs_two_spark_jobs_per_batch(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 2 * 4, len(jobs)
+    assert len(jobs) == 4, len(jobs)
+
+
+def test_failed_batch_stops_the_job_and_resume_finishes_it(spark, tmp_path):
+    """A poisoned batch fails the job under on_error='fail'.  Nothing
+    is submitted after the failure, the batch still in flight runs to
+    its end and commits, and every committed bucket belongs to a batch
+    that committed whole.  A clean resume then commits exactly the
+    remaining buckets, each row written once."""
+    import uuid
+
+    from pdfextract_spark.settings import Settings, Typesetter
+    from pdfextract_spark.sinks import (
+        completed_buckets,
+        run_extraction_job,
+        with_bucket,
+    )
+
+    t = make_transcripts(spark)
+    out = str(tmp_path / "out")
+    # title_size=0 detonates on multi-paragraph turns only
+    poison = Settings(typesetter=Typesetter(title_size=0.0))
+    batches = [frozenset(range(b, b + 2)) for b in range(0, 16, 2)]
+    poisoned = {
+        b
+        for r in with_bucket(t, 16).collect()
+        for b in batches
+        if r["bucket"] in b and "\n\n" in r["text"]
+    }
+    assert poisoned and len(poisoned) < len(batches) - 2
+
+    sc = spark.sparkContext
+    group = f"failing-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "a job with a poisoned batch")
+    try:
+        with pytest.raises(Exception, match="conv_id="):
+            run_extraction_job(
+                spark, t, out, settings=poison, n_buckets=16,
+                buckets_per_batch=2, on_error="fail",
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    done = completed_buckets(spark, out, 16)
+    committed = {b for b in batches if b <= done}
+    assert done == set().union(*committed), done
+    assert not committed & poisoned, done
+    # one write per started batch: the clean ones all committed, the
+    # failed ones are poisoned, and the batches after the failure never
+    # started
+    status = [
+        sc.statusTracker().getJobInfo(j).status
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    assert status.count("SUCCEEDED") == len(committed), (status, done)
+    assert 0 < status.count("FAILED") <= len(poisoned), status
+    assert len(status) < len(batches), status
+
+    lineage = run_extraction_job(
+        spark, t, out, n_buckets=16, buckets_per_batch=2
+    ).collect()
+    assert sorted(r["bucket"] for r in lineage) == list(range(16))
+    written = spark.read.parquet(out).count()
+    assert sum(r["rows_out"] for r in lineage) == written == len(TEXTS)
+
+
+def test_job_output_independent_of_batching(spark, tmp_path):
+    """The same transcripts as 16 one-bucket batches, which cycle the
+    two in-flight slots many times, and as one 16-bucket batch write
+    the same rows and the same lineage apart from commit times."""
+    from pdfextract_spark.sinks import run_extraction_job
+
+    t = make_transcripts(spark)
+    runs = []
+    for per_batch in (1, 16):
+        out = str(tmp_path / f"out{per_batch}")
+        lineage = run_extraction_job(
+            spark, t, out, n_buckets=16, buckets_per_batch=per_batch
+        )
+        rows = spark.read.parquet(out).collect()
+        runs.append((
+            sorted(rows, key=lambda r: (r["conv_id"], r["turn_idx"])),
+            sorted(tuple(r) for r in lineage.drop("committed_at").collect()),
+        ))
+    assert len(runs[0][0]) == len(TEXTS)
+    assert len(runs[0][1]) == 16
+    assert runs[0] == runs[1]
 
 
 def test_completed_buckets_runs_at_most_two_jobs(spark, tmp_path):
@@ -814,8 +899,10 @@ def test_lineage_reads_see_every_committed_row(spark, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
 
     from pdfextract_spark.sinks import (
+        LINEAGE_DDL,
         LINEAGE_SUBDIR,
         completed_buckets,
         run_extraction_job,
@@ -826,7 +913,25 @@ def test_lineage_reads_see_every_committed_row(spark, tmp_path):
         spark, make_transcripts(spark), out, n_buckets=8,
         buckets_per_batch=4,
     )
-    files = glob.glob(f"{out}/{LINEAGE_SUBDIR}/*.parquet")
+    lineage_dir = f"{out}/{LINEAGE_SUBDIR}"
+    # one file per batch, committed by a rename that leaves no hidden
+    # temporary behind
+    files = glob.glob(f"{lineage_dir}/*.parquet")
+    assert len(files) == 2, files
+    assert glob.glob(f"{lineage_dir}/.part-*.parquet") == []
+    # NOT NULL columns are required in every footer
+    not_null = {
+        f.name for f in StructType.fromDDL(LINEAGE_DDL) if not f.nullable
+    }
+    assert not_null
+    for f in files:
+        schema = pq.ParquetFile(f).schema
+        required = {
+            schema.column(i).name
+            for i in range(len(schema))
+            if schema.column(i).max_definition_level == 0
+        }
+        assert required == not_null, (f, required)
     on_disk = pa.concat_tables([pq.read_table(f) for f in files])
     key = ("bucket", "rows_out", "committed_at")
     want = sorted(zip(*(on_disk.column(c).to_pylist() for c in key)))
