@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "delete_children",
-    "delete_path",
     "hadoop_fs",
     "is_empty_start_exc",
     "local_frame",
@@ -32,27 +30,6 @@ def hadoop_fs(spark: SparkSession, path: str):
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return fs, hpath
-
-
-def delete_path(spark: SparkSession, path: str) -> bool:
-    """Recursively delete ``path``.  Returns True if something was
-    deleted, False if the path did not exist."""
-    fs, hpath = hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return False
-    return bool(fs.delete(hpath, True))
-
-
-def delete_children(spark: SparkSession, path: str, prefix: str) -> None:
-    """Recursively delete every direct child of ``path`` whose name
-    starts with ``prefix`` (e.g. the ``bucket=N`` partitions of a
-    table).  The prefix is matched literally, not as a glob."""
-    fs, hpath = hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return
-    for st in fs.listStatus(hpath):
-        if st.getPath().getName().startswith(prefix):
-            fs.delete(st.getPath(), True)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:

@@ -308,6 +308,31 @@ def extract(
     ``carry=("ts",)`` keeps the event-time column for a downstream
     watermarked streaming aggregation.
     """
+    src, schema, run = extraction_stage(
+        df, settings, rendered, want, on_error, carry
+    )
+    if repartition:
+        src = src.repartition(
+            repartition, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
+        )
+    return src.mapInArrow(run, schema=schema)
+
+
+def extraction_stage(
+    df: DataFrame,
+    settings: Settings = DEFAULT,
+    rendered: bool = True,
+    want: tuple[str, ...] | None = None,
+    on_error: str = "fail",
+    carry: tuple[str, ...] = (),
+):
+    """The Python stage of ``extract``, arguments as there: ->
+    ``(src, schema, run)``, the projected input, the output schema and
+    the function that maps ``src``'s Arrow batches to output batches.
+    ``extract`` hands ``run`` to ``mapInArrow``; the extraction job's
+    bucket writer (``sinks.py``) calls it inside its own stage and
+    writes the batches instead of returning them, so both run this one
+    kernel loop."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
     selected = DEFAULT_ARTIFACTS if want is None else tuple(want)
@@ -341,10 +366,6 @@ def extract(
     )
 
     src = df.select("conv_id", "turn_idx", "role", "text", *carry)
-    if repartition:
-        src = src.repartition(
-            repartition, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-        )
 
     precision = settings.precision
 
@@ -406,7 +427,7 @@ def extract(
                 arrays.append(col)
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-    return src.mapInArrow(run, schema=schema)
+    return src, schema, run
 
 
 def extract_exploded(df: DataFrame, artifact: str, **kw) -> DataFrame:

@@ -660,7 +660,7 @@ def test_job_lineage_matches_output(spark, tmp_path):
     no input and the sentinel rows of poisoned turns counted in
     turns_errored under on_error='skip'."""
     from pdfextract_spark.settings import Settings, Typesetter
-    from pdfextract_spark.sinks import run_extraction_job
+    from pdfextract_spark.sinks import BUCKET_HASH, run_extraction_job
 
     out = str(tmp_path / "out")
     # title_size=0 detonates on multi-paragraph turns only
@@ -673,7 +673,8 @@ def test_job_lineage_matches_output(spark, tmp_path):
         "struct<bucket:int,rows_out:bigint,chars_in:bigint,"
         "chars_truncated:bigint,regions_found:bigint,"
         "sections_found:bigint,refs_matched:bigint,"
-        "turns_errored:bigint,n_buckets:int,committed_at:double>"
+        "turns_errored:bigint,n_buckets:int,bucket_hash:string,"
+        "committed_at:double>"
     )
     got = {
         r["bucket"]: r.asDict()
@@ -688,7 +689,10 @@ def test_job_lineage_matches_output(spark, tmp_path):
         "regions_found": 0, "sections_found": 0, "refs_matched": 0,
         "turns_errored": 0,
     }
-    want = {b: {"bucket": b, **zero, "n_buckets": 16} for b in range(16)}
+    want = {
+        b: {"bucket": b, **zero, "n_buckets": 16, "bucket_hash": BUCKET_HASH}
+        for b in range(16)
+    }
     for r in written.groupBy("bucket").agg(
         F.count("*").alias("rows_out"),
         F.sum("metrics.chars_in").alias("chars_in"),
@@ -939,6 +943,221 @@ def test_lineage_reads_see_every_committed_row(spark, tmp_path):
     assert sorted(tuple(r) for r in lineage.select(*key).collect()) == want
     assert completed_buckets(spark, out, 8) == set(range(8))
     assert "rows_out" not in spark.read.parquet(out).columns
+
+
+def test_job_refuses_out_dir_pyarrow_cannot_open(spark, tmp_path, monkeypatch):
+    """Every file operation of the job goes through one pyarrow.fs
+    filesystem, so a Hadoop-only scheme is refused with a ValueError
+    before any Spark job runs.  A relative path is made absolute
+    against the driver's working directory."""
+    import os
+    import uuid
+
+    from pdfextract_spark.sinks import run_extraction_job
+
+    t = make_transcripts(spark)
+    sc = spark.sparkContext
+    group = f"bad-out-dir-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "a job into an unsupported filesystem")
+    try:
+        with pytest.raises(ValueError, match=r"'s3a'.*file://.*s3://"):
+            run_extraction_job(spark, t, "s3a://b/out", n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    monkeypatch.chdir(tmp_path)
+    lineage = run_extraction_job(
+        spark, t, "rel_out", n_buckets=4, buckets_per_batch=4
+    )
+    assert lineage.count() == 4
+    assert os.path.isdir(tmp_path / "rel_out" / "_lineage")
+    assert spark.read.parquet(str(tmp_path / "rel_out")).count() == len(TEXTS)
+
+
+def test_job_local_out_dir_ignores_default_fs(spark, tmp_path, monkeypatch):
+    """pyarrow writes a scheme-less ``out_dir`` to local disk, so Spark
+    and the Hadoop probes of the resume must address the same local
+    files, not resolve the bare path against ``fs.defaultFS``.  Here
+    ``fs.defaultFS`` names a scheme no filesystem serves: any bare-path
+    lookup fails, and a resume pass still sees every committed
+    bucket."""
+    import os
+
+    from pdfextract_spark.sinks import run_extraction_job
+
+    t = make_transcripts(spark)
+    monkeypatch.chdir(tmp_path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    saved = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "nofs://cluster/")
+    try:
+        lineage = run_extraction_job(
+            spark, t, "out", n_buckets=4, buckets_per_batch=2
+        )
+        files = lineage.inputFiles()
+        assert files and all(f.startswith("file:/") for f in files)
+        assert lineage.count() == 4
+        again = run_extraction_job(
+            spark, t, "out", n_buckets=4, buckets_per_batch=2
+        )
+        assert again.count() == 4
+    finally:
+        conf.set("fs.defaultFS", saved)
+    assert spark.read.parquet(str(tmp_path / "out")).count() == len(TEXTS)
+    assert os.path.isdir(tmp_path / "out" / "_lineage")
+
+
+def test_commit_moves_only_listed_files(spark, tmp_path, monkeypatch):
+    """The driver commits a bucket from the files its manifest lists.
+    A file beside them that no manifest row names — what a failed or
+    speculative task attempt leaves in the staging dir — never reaches
+    the output, and goes with the batch's staging dir.  A ``_staging``
+    left by a crashed run is invisible to reads of the output and is
+    removed when the next job starts."""
+    import glob
+    import os
+    import shutil
+
+    from pdfextract_spark import sinks
+
+    real = sinks._bucket_writes
+    listed, strays, stage_dirs = [], [], []
+
+    class WithStrays:
+        def __init__(self, stage, stage_dir):
+            self.stage = stage
+            stage_dirs.append(stage_dir)
+
+        def collect(self):
+            rows = self.stage.collect()
+            for r in rows:
+                listed.append(f"bucket={r['bucket']}/{os.path.basename(r['path'])}")
+                stray = os.path.join(
+                    os.path.dirname(r["path"]), "part-0-1-stray.parquet"
+                )
+                shutil.copy(r["path"], stray)
+                strays.append(stray)
+            return rows
+
+    def writes(df, settings, want, on_error, fs, stage_dir):
+        return WithStrays(
+            real(df, settings, want, on_error, fs, stage_dir), stage_dir
+        )
+
+    monkeypatch.setattr(sinks, "_bucket_writes", writes)
+    out = str(tmp_path / "out")
+    lineage = sinks.run_extraction_job(
+        spark, make_transcripts(spark), out, n_buckets=4, buckets_per_batch=2
+    ).collect()
+    monkeypatch.undo()
+    assert strays and len(stage_dirs) == 2
+    got = sorted(
+        os.path.relpath(f, out) for f in glob.glob(f"{out}/bucket=*/*")
+    )
+    assert got == sorted(listed)
+    assert not any(os.path.exists(d) for d in stage_dirs)
+    assert not os.path.exists(f"{out}/_staging")
+    assert spark.read.parquet(out).count() == len(TEXTS)
+    assert sum(r["rows_out"] for r in lineage) == len(TEXTS)
+
+    # a crashed run's staging dir holding a valid output file
+    crashed = tmp_path / "out" / "_staging" / "crashed" / "bucket=0"
+    crashed.mkdir(parents=True)
+    shutil.copy(os.path.join(out, listed[0]), crashed / "part-0-0-x.parquet")
+    assert spark.read.parquet(out).count() == len(TEXTS)
+    sinks.run_extraction_job(
+        spark, make_transcripts(spark), out, n_buckets=4, buckets_per_batch=2
+    )
+    assert not os.path.exists(f"{out}/_staging")
+    assert spark.read.parquet(out).count() == len(TEXTS)
+
+
+@pytest.mark.parametrize("want", [None, ("references",)])
+def test_job_output_schema_is_extracts(spark, tmp_path, want):
+    """The job's output reads back as ``extract()``'s schema plus the
+    ``bucket`` partition column, and no data file carries pyarrow's
+    ``ARROW:schema`` footer key.  A task writes each bucket file's rows
+    as one row group, not one per Arrow batch it received, with column
+    statistics outside arrays only."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType
+
+    from pdfextract_spark.plans.extract import extract
+    from pdfextract_spark.sinks import run_extraction_job
+
+    # one task, which receives its 40 turns as 20 Arrow batches
+    t = spark.createDataFrame(
+        [(f"c{i % 3}", i, "user", TEXTS[i % len(TEXTS)]) for i in range(40)],
+        "conv_id string, turn_idx int, role string, text string",
+    ).repartition(1)
+    out = str(tmp_path / "out")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        run_extraction_job(
+            spark, t, out, n_buckets=4, buckets_per_batch=4, want=want
+        )
+    finally:
+        spark.conf.set(key, saved)
+    assert spark.read.parquet(out).schema == extract(t, want=want).schema.add(
+        "bucket", IntegerType()
+    )
+    files = glob.glob(f"{out}/bucket=*/*.parquet")
+    assert files
+    assert max(pq.ParquetFile(f).metadata.num_rows for f in files) > 2
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        assert b"ARROW:schema" not in (meta.metadata or {})
+        assert meta.num_row_groups == 1
+        # min/max only where a filter can be pushed down: not in arrays
+        group = meta.row_group(0)
+        stats = {
+            group.column(i).path_in_schema: group.column(i).is_stats_set
+            for i in range(meta.num_columns)
+        }
+        assert stats["turn_idx"] and stats["conv_id"]
+        assert not any(v for k, v in stats.items() if ".list." in k)
+
+
+def test_resume_refuses_another_bucket_hash(spark, tmp_path):
+    """Lineage records the bucket hash with its pinned input types
+    next to ``n_buckets``.  Lineage committed under another hash (here
+    the unpinned one) refuses to resume, as another ``n_buckets``
+    does: its bucket ids name other rows."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdfextract_spark.sinks import (
+        BUCKET_HASH,
+        LINEAGE_SUBDIR,
+        completed_buckets,
+        run_extraction_job,
+    )
+
+    t = make_transcripts(spark)
+    out = str(tmp_path / "out")
+    lineage = run_extraction_job(spark, t, out, n_buckets=4, buckets_per_batch=2)
+    assert {r["bucket_hash"] for r in lineage.collect()} == {BUCKET_HASH}
+    assert completed_buckets(spark, out, 4) == {0, 1, 2, 3}
+
+    f = sorted(glob.glob(f"{out}/{LINEAGE_SUBDIR}/*.parquet"))[0]
+    table = pq.read_table(f)
+    i = table.schema.get_field_index("bucket_hash")
+    unpinned = "pmod(xxhash64(conv_id, turn_idx), n_buckets)"
+    table = table.set_column(
+        i, table.schema.field(i), pa.array([unpinned] * table.num_rows)
+    )
+    pq.write_table(table, f)
+    with pytest.raises(ValueError, match="bucket_hash"):
+        completed_buckets(spark, out, 4)
+    with pytest.raises(ValueError, match="bucket_hash"):
+        run_extraction_job(spark, t, out, n_buckets=4, buckets_per_batch=2)
 
 
 def test_streaming_star_surface_complete():

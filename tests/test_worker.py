@@ -41,36 +41,63 @@ def _owners(tree: ast.AST) -> dict:
 
 
 def _resolve(name: str, scope, owner: dict, tree):
-    """The def ``name`` refers to from inside ``scope``, innermost first."""
+    """What ``name`` refers to from inside ``scope``, innermost first:
+    a def, or ``(value, index, scope)`` for an assignment from
+    ``value`` — ``index`` None for ``name = value``, the position of
+    ``name`` for ``a, name = value``."""
     while True:
         for node, s in owner.items():
-            if s is scope and isinstance(node, _DEFS) and node.name == name:
+            if s is not scope:
+                continue
+            if isinstance(node, _DEFS) and node.name == name:
                 return node
+            if isinstance(node, ast.Assign):
+                for target in node.targets:
+                    if isinstance(target, ast.Name) and target.id == name:
+                        return node.value, None, scope
+                    if isinstance(target, ast.Tuple):
+                        for i, elt in enumerate(target.elts):
+                            if isinstance(elt, ast.Name) and elt.id == name:
+                                return node.value, i, scope
         if scope is tree:
             return None
         scope = owner[scope]
 
 
+def _returned(call, index, scope, owner, tree) -> list:
+    """The defs a named factory ``call`` returns: each return's value,
+    or its element ``index`` when the factory returns a tuple."""
+    if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Name)):
+        return [None]
+    factory = _resolve(call.func.id, scope, owner, tree)
+    if not isinstance(factory, _DEFS):
+        return [None]
+    found = []
+    for n, s in owner.items():
+        if s is not factory or not isinstance(n, ast.Return):
+            continue
+        value = n.value
+        if index is not None:
+            elts = value.elts if isinstance(value, ast.Tuple) else []
+            value = elts[index] if index < len(elts) else None
+        found.append(
+            _resolve(value.id, factory, owner, tree)
+            if isinstance(value, ast.Name) else None
+        )
+    return [d if isinstance(d, _DEFS) else None for d in found] or [None]
+
+
 def _stage_defs(fn, scope, owner, tree) -> list:
-    """The defs a stage argument runs: a named function, or what a
-    named factory call returns.  None marks an argument this cannot
-    resolve (a lambda, an attribute, ...)."""
+    """The defs a stage argument runs: a named function, what a named
+    factory call returns, or a name assigned from such a call — the
+    whole result or one element of a returned tuple.  None marks an
+    argument this cannot resolve (a lambda, an attribute, ...)."""
     if isinstance(fn, ast.Name):
-        return [_resolve(fn.id, scope, owner, tree)]
-    if isinstance(fn, ast.Call) and isinstance(fn.func, ast.Name):
-        factory = _resolve(fn.func.id, scope, owner, tree)
-        if factory is None:
-            return [None]
-        rets = [
-            n for n, s in owner.items()
-            if s is factory and isinstance(n, ast.Return)
-        ]
-        return [
-            _resolve(r.value.id, factory, owner, tree)
-            if isinstance(r.value, ast.Name) else None
-            for r in rets
-        ] or [None]
-    return [None]
+        d = _resolve(fn.id, scope, owner, tree)
+        if isinstance(d, tuple):
+            return _returned(*d, owner, tree)
+        return [d]
+    return _returned(fn, None, scope, owner, tree)
 
 
 def _settles_first(fn) -> bool:
@@ -113,9 +140,14 @@ def test_every_python_stage_settles_its_worker_first():
     assert {f: ln for f, ln in missing.items() if ln} == {}, (
         "call settle_worker() first in these stage functions"
     )
-    # extract, masks, svm, multimodal x3, transcripts, __main__ x2,
-    # stateful: the detector must keep seeing all of them
-    assert sum(len(s) for s in stages.values()) >= 10
+    # extract, the job's bucket writer, masks, svm, multimodal x3,
+    # transcripts, __main__ x2, stateful: the detector must keep
+    # seeing all of them
+    assert sum(len(s) for s in stages.values()) >= 11
+    # extract's stage comes out of the shared factory's tuple; the
+    # bucket writer is its own function around it
+    assert len(stages["pdfextract_spark/plans/extract.py"]) == 1
+    assert len(stages["pdfextract_spark/sinks.py"]) == 1
 
 
 def test_detector_resolves_names_factories_and_docstrings():
@@ -134,6 +166,14 @@ def factory():
         yield 1
     return fn
 
+def stage():
+    def run(batches):
+        settle_worker()
+        yield from batches
+    def raw(batches):
+        yield from batches
+    return "a int", run, raw
+
 def plan(df):
     def good(batches):
         x = 1
@@ -142,14 +182,25 @@ def plan(df):
     df.mapInPandas(bad, "a int")
     df.groupBy("k").applyInPandasWithState(factory(), "a int")
     df.mapInPandas(lambda it: it, "a int")
+    schema, run, raw = stage()
+    df.mapInArrow(run, schema=schema)
+    df.mapInArrow(raw, schema=schema)
+    fn = factory()
+    df.mapInArrow(fn, "a int")
+    whole = stage()
+    df.mapInArrow(whole, "a int")
     return df.mapInArrow(func=unknown, schema="a int")
 '''
     assert _stages(ast.parse(src)) == [
-        (20, False),  # the nested good (shadows the module-level one)
-        (21, False),
-        (22, True),
-        (23, False),
-        (24, False),
+        (28, False),  # the nested good (shadows the module-level one)
+        (29, False),
+        (30, True),
+        (31, False),
+        (33, True),  # one element of a returned tuple
+        (34, False),
+        (36, True),  # a name bound to a factory call
+        (38, False),  # the whole tuple is no function
+        (39, False),
     ]
 
 

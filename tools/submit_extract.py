@@ -10,10 +10,17 @@ Build the dependency zip and submit:
         --input /root/testdata/sf0.001 --output /tmp/extract_job_out \\
         --buckets 16 --resume
 
-On a real cluster only ``--master`` changes (YARN/k8s); the job is a
-single narrow stage plus bucketed commits, so executor count scales it
-linearly.  The run is resumable: re-submitting after a failure skips
-buckets with committed lineage.
+On a real cluster ``--master`` changes (YARN/k8s), and ``--output``
+must be a path that ``pyarrow.fs`` opens from the driver and from
+every executor: a shared mount, or an ``hdfs://``, ``s3://``,
+``gs://`` or ``abfs://`` URI.  A local path is handed to Spark as a
+``file://`` URI, not resolved against ``fs.defaultFS``.  Hadoop-only
+schemes such as ``s3a://`` are refused before any Spark job runs;
+credentials come from pyarrow's own chain, not ``spark.hadoop.*``,
+and ``hdfs://`` needs libhdfs on every executor.  The job is a single narrow
+stage plus bucketed commits, so executor count scales it linearly.
+The run is resumable: re-submitting after a failure skips buckets
+with committed lineage.
 """
 
 from __future__ import annotations
