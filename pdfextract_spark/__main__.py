@@ -258,10 +258,14 @@ def main(argv: list[str] | None = None) -> None:
             )
         from .sinks import run_extraction_job
 
-        run_extraction_job(
+        lineage = run_extraction_job(
             spark, transcripts, args.output, settings,
             n_buckets=args.buckets, resume=True, want=want,
         )
+        # from the lineage, not a re-read of --output: the job wrote a
+        # local --output to file://<abspath>, and a bare-path read
+        # resolves against fs.defaultFS
+        n = lineage.groupBy().sum("rows_out").first()[0]
     else:
         from .plans.extract import extract
 
@@ -277,7 +281,8 @@ def main(argv: list[str] | None = None) -> None:
                 ),
             )
         out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    if not args.buckets or args.render_as == "xml":
+        n = spark.read.parquet(args.output).count()
     print(f"wrote {n} rows to {args.output}", file=sys.stderr)
     spark.stop()
 

@@ -25,8 +25,8 @@ snapshot):
   time.  That file is the batch's commit marker: it appears by an
   atomic rename once the batch's output is in place.
 - every file operation (staged writes, moves, deletes, the lineage
-  file) goes through one ``pyarrow.fs`` filesystem, resolved once per
-  job from ``out_dir``.
+  file and the resume's read of it) goes through one ``pyarrow.fs``
+  filesystem, resolved once per job from ``out_dir``.
 - ``resume=True`` processes only buckets without a committed lineage
   row; rerunning a partially-failed job is idempotent (a bucket's
   output is replaced whole at its commit).  ``resume=False`` deletes
@@ -106,29 +106,37 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 def completed_buckets(
     spark: SparkSession, out_dir: str, n_buckets: int | None = None
 ) -> set[int]:
-    """Bucket ids with a committed lineage row.  Only a MISSING
-    lineage path means "nothing done yet" — any other read failure
-    propagates (swallowing it would silently reprocess a finished job
-    and append duplicate lineage rows).  Lineage recorded under a
-    different bucketing refuses to resume — another ``bucket_hash``
-    always, another ``n_buckets`` when one is given: the old bucket
-    ids would mis-assign rows under the new hash, silently skipping
-    data."""
-    # empty-start classification shared with the streaming bloom
-    # store — see ioutil.is_empty_start_exc for why only missing-path
-    # reads may map to "nothing committed yet"
-    from .ioutil import read_parquet_or_none
+    """Bucket ids with a committed lineage row, read on the driver
+    through the job's ``pyarrow.fs`` filesystem: no Spark job runs.
+    Only a MISSING lineage path means "nothing done yet" — any other
+    read failure, e.g. a corrupt file, propagates (swallowing it would
+    silently reprocess a finished job and append duplicate lineage
+    rows).  Lineage recorded under a different bucketing refuses to
+    resume — another ``bucket_hash`` always, another ``n_buckets`` when
+    one is given: the old bucket ids would mis-assign rows under the
+    new hash, silently skipping data."""
+    _, fs, root = _filesystem(out_dir)
+    return _completed(out_dir, fs, root, n_buckets)
 
-    # declared schema: lineage written before a pin reads it as NULL,
-    # which the guards below skip
-    lineage = read_parquet_or_none(
-        spark, f"{out_dir}/{LINEAGE_SUBDIR}", LINEAGE_DDL
-    )
-    if lineage is None:
+
+def _completed(out_dir: str, fs, root: str, n_buckets: int | None) -> set[int]:
+    """``completed_buckets`` of ``root`` on ``fs``; ``out_dir`` names
+    it in the errors."""
+    import pyarrow.dataset as ds
+    from pyarrow.fs import FileType
+
+    path = f"{root}/{LINEAGE_SUBDIR}"
+    if fs.get_file_info(path).type == FileType.NotFound:
         return set()
-    rows = lineage.select("bucket", "n_buckets", "bucket_hash").distinct().collect()
+    # the declared schema: lineage written before a pin reads it as
+    # NULL, which the guards below skip.  Hidden ``.part-*`` and
+    # ``_*`` files are skipped, as Spark's reads skip them
+    table = ds.dataset(
+        path, schema=_lineage_schema(), format="parquet", filesystem=fs
+    ).to_table(columns=["bucket", "n_buckets", "bucket_hash"])
+    buckets, pins, hashes = (set(c.to_pylist()) for c in table.columns)
     if n_buckets is not None:
-        bad = [r[1] for r in rows if r[1] is not None and r[1] != n_buckets]
+        bad = [n for n in pins if n is not None and n != n_buckets]
         if bad:
             raise ValueError(
                 f"lineage at {out_dir} was committed with "
@@ -137,7 +145,7 @@ def completed_buckets(
                 f"already-'done' bucket ids — rerun with the original "
                 f"bucketing or a fresh out_dir"
             )
-    bad = [r[2] for r in rows if r[2] is not None and r[2] != BUCKET_HASH]
+    bad = [h for h in hashes if h is not None and h != BUCKET_HASH]
     if bad:
         raise ValueError(
             f"lineage at {out_dir} was committed with "
@@ -146,7 +154,16 @@ def completed_buckets(
             f"already-'done' bucket ids — rerun with the original "
             f"build or a fresh out_dir"
         )
-    return {r[0] for r in rows}
+    return buckets
+
+
+def _lineage_schema():
+    """``LINEAGE_DDL`` as an Arrow schema, its NOT NULL columns
+    required."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(LINEAGE_DDL))
 
 
 def _filesystem(out_dir: str):
@@ -385,10 +402,16 @@ def run_extraction_job(
     batch nothing more is submitted; the other batch in flight runs to
     its end (and commits if it succeeds), then the failure is raised.
 
+    A batch runs as many tasks as its filtered input has splits, so a
+    single-file input runs one task per batch.  Repartition such an
+    input before the job, as ``extract(repartition=)`` does for
+    ``extract``.
+
     Batches bound the blast radius of a failure: a crash loses at most
     two uncommitted batches, and ``resume=True`` picks up from the
-    committed lineage rows.  A job first deletes any ``_staging`` a
-    crashed run left.  ``resume=False`` also deletes the existing
+    committed lineage rows, read on the driver through pyarrow with no
+    Spark job.  A job first deletes any ``_staging`` a crashed run
+    left.  ``resume=False`` also deletes the existing
     lineage and ``bucket=*`` partitions.  ``on_error`` and ``want``
     are passed to ``extract``; under ``on_error="skip"`` a bucket's
     ``turns_errored`` counts its sentinel rows.
@@ -398,19 +421,17 @@ def run_extraction_job(
     import pyarrow as pa
     from pyarrow.fs import FileSelector
     from pyspark import inheritable_thread_target
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     out_dir, fs, root = _filesystem(out_dir)
     lineage_dir = f"{root}/{LINEAGE_SUBDIR}"
     staging_dir = f"{root}/{_STAGING_SUBDIR}"
     # required (NOT NULL) columns stay required in the written footer
-    lineage_arrow = to_arrow_schema(StructType.fromDDL(LINEAGE_DDL))
+    lineage_arrow = _lineage_schema()
     src = with_bucket(transcripts, n_buckets)
 
     _remove(fs, staging_dir)
     if resume:
-        done = completed_buckets(spark, out_dir, n_buckets)
+        done = _completed(out_dir, fs, root, n_buckets)
     else:
         # a full reprocess starts from an EMPTY table: lineage
         # accumulates per batch (a second generation would double every

@@ -507,46 +507,29 @@ def test_extract_carry_columns(spark):
 def test_completed_buckets_error_classification(spark, tmp_path):
     """Benign 'nothing committed yet' reads return set(): a missing
     lineage path and an empty lineage dir (crash between mkdir and
-    first task commit).  Any OTHER AnalysisException — e.g. column
-    resolution against an existing table — must propagate: mapping it
-    to set() would silently restart all buckets and append duplicate
-    lineage rows."""
+    first commit).  A hidden file is skipped, as a half-written commit
+    is.  Any other read failure — here a truncated lineage file — must
+    propagate: mapping it to set() would silently restart all buckets
+    and append duplicate lineage rows."""
+    import pyarrow as pa
     import pytest as _pytest
-    from pyspark.errors import AnalysisException
 
     from pdfextract_spark.sinks import completed_buckets
 
     # missing path
     assert completed_buckets(spark, str(tmp_path / "never_written")) == set()
-    # existing but empty lineage dir
+    # existing but empty lineage dir; a garbage hidden file is ignored
     empty = tmp_path / "empty_out"
     (empty / "_lineage").mkdir(parents=True)
+    (empty / "_lineage" / ".part-x.parquet").write_bytes(b"garbage")
     assert completed_buckets(spark, str(empty)) == set()
 
-    # non-benign AnalysisException propagates (stub reader raises the
-    # kind of resolution error a real-but-broken lineage table would)
-    class _Reader:
-        def schema(self, *a):
-            return self
-
-        def parquet(self, path):
-            raise AnalysisException(
-                message="[UNRESOLVED_COLUMN] cannot resolve 'bucket'",
-                errorClass="UNRESOLVED_COLUMN",
-            )
-
-    class _Spark:
-        # the real filesystem, which finds the lineage dir made below:
-        # a missing path is answered before any read
-        sparkContext = spark.sparkContext
-
-        @property
-        def read(self):
-            return _Reader()
-
-    (tmp_path / "whatever" / "_lineage").mkdir(parents=True)
-    with _pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
-        completed_buckets(_Spark(), str(tmp_path / "whatever"))
+    # a truncated lineage file raises
+    bad = tmp_path / "bad_out" / "_lineage"
+    bad.mkdir(parents=True)
+    (bad / "part-bad.parquet").write_bytes(b"PAR1xxxx")
+    with _pytest.raises(pa.ArrowInvalid):
+        completed_buckets(spark, str(tmp_path / "bad_out"))
 
 
 def test_extract_null_turn_idx_obeys_on_error(spark):
@@ -820,29 +803,46 @@ def test_job_output_independent_of_batching(spark, tmp_path):
     assert runs[0] == runs[1]
 
 
-def test_completed_buckets_runs_at_most_two_jobs(spark, tmp_path):
-    """On a committed store, completed_buckets reads the lineage with
-    its declared schema; a mergeSchema read adds a schema-inference
-    job (3 jobs)."""
+def test_completed_buckets_runs_no_spark_job(spark, tmp_path):
+    """On a committed store, completed_buckets reads the lineage on
+    the driver through pyarrow, and a no-op resume runs no Spark job
+    either."""
     import uuid
 
     from pdfextract_spark.sinks import completed_buckets, run_extraction_job
 
     out = str(tmp_path / "out")
-    run_extraction_job(
-        spark, make_transcripts(spark), out, n_buckets=16,
-        buckets_per_batch=16,
-    )
+    t = make_transcripts(spark)
+    run_extraction_job(spark, t, out, n_buckets=16, buckets_per_batch=16)
     sc = spark.sparkContext
     group = f"completed-buckets-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "count the jobs of completed_buckets")
     try:
         done = completed_buckets(spark, out, 16)
+        run_extraction_job(spark, t, out, n_buckets=16, buckets_per_batch=16)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert done == set(range(16))
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 2, len(jobs)
+    assert len(jobs) == 0, len(jobs)
+
+
+def test_completed_buckets_on_a_scheme_only_pyarrow_opens(spark):
+    """The lineage probe goes through the job's pyarrow filesystem, so
+    a scheme Hadoop has no filesystem for (pyarrow's ``mock://``)
+    reads as nothing committed, with no Spark job."""
+    import uuid
+
+    from pdfextract_spark.sinks import completed_buckets
+
+    sc = spark.sparkContext
+    group = f"mock-lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "completed_buckets on mock://")
+    try:
+        assert completed_buckets(spark, "mock:///out") == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_resume_from_pre_pin_lineage(spark, tmp_path):
@@ -1006,6 +1006,33 @@ def test_job_local_out_dir_ignores_default_fs(spark, tmp_path, monkeypatch):
         conf.set("fs.defaultFS", saved)
     assert spark.read.parquet(str(tmp_path / "out")).count() == len(TEXTS)
     assert os.path.isdir(tmp_path / "out" / "_lineage")
+
+
+def test_cli_buckets_counts_rows_without_default_fs(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``extract --buckets`` with a relative ``--output`` reports the
+    rows the job wrote from its lineage.  A re-read of the bare path
+    would resolve it against ``fs.defaultFS``, which here names a
+    scheme no filesystem serves."""
+    from pdfextract_spark.__main__ import main
+
+    src = tmp_path / "in"
+    make_transcripts(spark).write.parquet(str(src))
+    monkeypatch.chdir(tmp_path)
+    # main() ends by stopping the session it got: keep the shared one
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    saved = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "nofs://cluster/")
+    try:
+        main(["extract", "--buckets", "4", "--input", src.as_uri(),
+              "--output", "out", "--master", "local[1]"])
+    finally:
+        conf.set("fs.defaultFS", saved)
+        spark.sparkContext.setLogLevel("ERROR")
+    assert f"wrote {len(TEXTS)} rows to out" in capsys.readouterr().err
+    assert spark.read.parquet(str(tmp_path / "out")).count() == len(TEXTS)
 
 
 def test_commit_moves_only_listed_files(spark, tmp_path, monkeypatch):

@@ -42,6 +42,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.appName("pdfextract-spark-extract")
@@ -66,13 +67,16 @@ def main() -> None:
         resume=args.resume,
         on_error=("skip" if args.skip_errors else "fail"),
     )
-    stats = lineage.groupBy().sum("rows_out", "refs_matched").collect()[0]
+    # one Spark job over the lineage for the whole summary
+    stats = lineage.agg(
+        F.sum("rows_out"), F.sum("refs_matched"), F.count("*")
+    ).first()
     print(
         json.dumps(
             {
                 "rows_out": stats[0],
                 "refs_matched": stats[1],
-                "lineage_rows": lineage.count(),
+                "lineage_rows": stats[2],
                 "output": args.output,
             }
         )
