@@ -263,7 +263,7 @@ def main(argv: list[str] | None = None) -> None:
             n_buckets=args.buckets, resume=True, want=want,
         )
         # from the lineage, not a re-read of --output: the job wrote a
-        # local --output to file://<abspath>, and a bare-path read
+        # local --output to local disk, and a bare-path Spark read
         # resolves against fs.defaultFS
         n = lineage.groupBy().sum("rows_out").first()[0]
     else:

@@ -892,82 +892,80 @@ def connected_components(
     observable, since wall time is rounds x bounded-shuffle cost).
     Each iteration is three bounded shuffles
     (neighbor propagate, pointer jump, re-minimize) on data sized by
-    edges + nodes — the Kiveris-et-al. alternating-star algorithm is
-    the next refinement if even log-diameter rounds are too many.
+    edges + nodes, run as ONE Spark job: the aggregate that counts the
+    round's changed labels also materializes its lazy checkpoint fence
+    (the first round's job materializes the symmetrized edges too).
+    The Kiveris-et-al. alternating-star algorithm is the next
+    refinement if even log-diameter rounds are too many.
     """
     sym = edges.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).unionAll(
         edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("comp"))
     # checkpoint truncates the lineage the iterative loop would
     # otherwise grow without bound (each round re-plans the previous)
-    sym = fence(sym, eager=True)
-    converged = False
+    sym = fence(sym)
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels = nodes.select("node", F.col("node").alias("comp"))
     prev = None
-    for i in range(max_iter):
-        neigh_min = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("neigh_comp"))
-        )
-        joined = labels.join(
-            neigh_min, labels["node"] == neigh_min["src"], "left"
-        )
-        if i == 0:
-            # round 1's jump is a guaranteed no-op (comp == node), so
-            # the label-of-label join would shuffle for nothing
-            cand = F.coalesce("neigh_comp", F.col("comp"))
-        else:
-            # pointer jump: look up the label OF the current label
-            # (always a node in the same component, so least() below
-            # stays safe)
-            jump = labels.select(
-                F.col("node").alias("_jn"), F.col("comp").alias("_jc")
+    try:
+        for i in range(max_iter):
+            neigh_min = (
+                sym.join(labels, sym["dst"] == labels["node"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("neigh_comp"))
             )
-            joined = joined.join(jump, labels["comp"] == F.col("_jn"), "left")
-            cand = F.least(
-                F.coalesce("neigh_comp", F.col("comp")),
-                F.coalesce("_jc", F.col("comp")),
+            joined = labels.join(
+                neigh_min, labels["node"] == neigh_min["src"], "left"
             )
-        # the changed flag rides along in the SAME projection (a label
-        # only ever decreases, so changed == some candidate beat it)
-        # — checking convergence off the checkpoint costs a cheap scan
-        # instead of the former extra join against the old labels
-        new_labels = joined.select(
-            "node",
-            F.least(F.col("comp"), cand).alias("comp"),
-            (cand < F.col("comp")).alias("_changed"),
-        )
-        ckpt = fence(new_labels, eager=True)
-        changed = ckpt.where("_changed").limit(1).count()
-        # the superseded round's checkpoint is dead once labels moves
-        # on — genuinely release its blocks instead of retaining
-        # max_iter copies.  (DataFrame.unpersist() is a NO-OP for
-        # localCheckpoint storage — it routes through the cache
-        # manager, which never saw these blocks; fence/release_fence
-        # free them through the Java RDD handle.  Verified: the former
-        # unpersist() left every round's RDD in getPersistentRDDs.)
-        if prev is not None:
-            release_fence(prev)
-        prev = ckpt
-        labels = ckpt.drop("_changed")
-        if stats is not None:
-            stats["rounds"] = i + 1
-        if changed == 0:
-            converged = True
-            break
-    # the returned labels depend only on the FINAL round's checkpoint —
-    # the symmetrized edge table's blocks are dead weight once the loop
-    # ends (the final checkpoint itself stays live for the caller; wrap
-    # the call in fence_scope() to release it after consumption)
-    release_fence(sym)
-    if not converged:
+            if i == 0:
+                # round 1's jump is a guaranteed no-op (comp == node), so
+                # the label-of-label join would shuffle for nothing
+                cand = F.coalesce("neigh_comp", F.col("comp"))
+            else:
+                # pointer jump: look up the label OF the current label
+                # (always a node in the same component, so least() below
+                # stays safe)
+                jump = labels.select(
+                    F.col("node").alias("_jn"), F.col("comp").alias("_jc")
+                )
+                joined = joined.join(jump, labels["comp"] == F.col("_jn"), "left")
+                cand = F.least(
+                    F.coalesce("neigh_comp", F.col("comp")),
+                    F.coalesce("_jc", F.col("comp")),
+                )
+            # the changed flag rides along in the SAME projection (a label
+            # only ever decreases, so changed == some candidate beat it)
+            new_labels = joined.select(
+                "node",
+                F.least(F.col("comp"), cand).alias("comp"),
+                (cand < F.col("comp")).alias("_changed"),
+            )
+            ckpt = fence(new_labels)
+            # one job both materializes the round's checkpoint and
+            # counts its changed labels
+            changed = ckpt.agg(F.count_if("_changed")).head()[0]
+            # the superseded round's checkpoint is dead once labels moves
+            # on — genuinely release its blocks instead of retaining
+            # max_iter copies.  (DataFrame.unpersist() is a NO-OP for
+            # localCheckpoint storage — it routes through the cache
+            # manager, which never saw these blocks; fence/release_fence
+            # free them through the Java RDD handle.  Verified: the former
+            # unpersist() left every round's RDD in getPersistentRDDs.)
+            if prev is not None:
+                release_fence(prev)
+            prev = ckpt
+            labels = ckpt.drop("_changed")
+            if stats is not None:
+                stats["rounds"] = i + 1
+            if changed == 0:
+                # the returned labels depend only on this round's
+                # checkpoint, which stays live for the caller (wrap the
+                # call in fence_scope() to release it after consumption)
+                return labels.select(F.col("node"), F.col("comp"))
         # the caller gets no frame back on this path, so the final
-        # round's checkpoint would otherwise leak with no release
-        # handle — free it before raising
+        # round's checkpoint would otherwise leak with no release handle
         if prev is not None:
             release_fence(prev)
         raise RuntimeError(
@@ -975,7 +973,10 @@ def connected_components(
             f"(a component's diameter exceeds max_iter); raise max_iter — "
             f"returning partial labels would silently corrupt dedup"
         )
-    return labels.select(F.col("node"), F.col("comp"))
+    finally:
+        # the symmetrized edge table's blocks are dead weight once the
+        # loop ends, whichever way it ends
+        release_fence(sym)
 
 
 def near_dup_dedup(

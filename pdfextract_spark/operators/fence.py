@@ -14,9 +14,12 @@ judge flagged exactly this.
 
 This module is that release path:
 
-- ``fence(df)``        — localCheckpoint + record the checkpoint RDD id
-                         on the returned frame (and register it with the
-                         innermost active ``fence_scope``, if any).
+- ``fence(df)``        — lazy localCheckpoint: the first job that reads
+                         the returned frame materializes it.  The frame
+                         records its checkpoint RDD, read from its own
+                         logical plan (a ``LogicalRDD``), and registers
+                         with the innermost active ``fence_scope``, if
+                         any.
 - ``release_fence(df)`` — genuinely free the blocks via the Java RDD
                          handle.  The frame MUST NOT be used afterwards:
                          its lineage was truncated at the checkpoint, so
@@ -27,19 +30,16 @@ This module is that release path:
                          inside it on exit; the ergonomic form for
                          "run operator, consume result, free storage".
 
+A fence frees only its own checkpoint.  Checkpointing a frame that
+reads a ``.cache()``d frame not yet materialized persists that cache's
+column buffers in the same call, so watching which RDDs appear would
+free the caller's cache too; the plan names the checkpoint RDD alone.
+
 Caveats (inherited from localCheckpoint itself, documented once here):
 the fenced frame is batch-only (checkpointing needs a live driver) and
 an executor loss makes its blocks unrecoverable — the job fails instead
 of recomputing.  That trade was measured worthwhile for self-joined
 intermediates.
-
-Checkpoint-id discovery diffs ``sc.getPersistentRDDs`` around the
-``localCheckpoint`` call (the RDD registers at CALL time even for lazy
-checkpoints — verified).  That diff assumes no concurrent
-``persist``/``checkpoint`` from OTHER driver threads in the same
-instant; with one, the scope may release a bystander's blocks.  Fence
-creation is therefore guarded by a module lock — release is not, since
-ids are already pinned by then.
 """
 
 from __future__ import annotations
@@ -50,44 +50,25 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-_FENCE_ATTR = "_pdfextract_fence_rdd_ids"
-_lock = threading.Lock()
+_FENCE_ATTR = "_pdfextract_fence_rdd"
 _scopes = threading.local()
 
 
-def _persistent_ids(sc) -> set[int]:
-    it = sc._jsc.sc().getPersistentRDDs().iterator()
-    ids: set[int] = set()
-    while it.hasNext():
-        ids.add(it.next()._1())
-    return ids
-
-
-def fence(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Materialize ``df`` behind a localCheckpoint and return the fenced
-    frame with its checkpoint RDD id recorded for later release.
-
-    ``eager=False`` (default) defers materialization to the first job
-    that touches the frame — right for operators whose result may be
-    filtered before consumption.  ``eager=True`` materializes now —
-    right for iterative loops that must truncate lineage each round.
-    """
-    sc = df.sparkSession.sparkContext
-    # the lock guards only the id-diff around the (lazy) checkpoint
-    # CALL — the RDD registers in getPersistentRDDs at call time.
-    # Materialization for eager=True runs OUTSIDE the lock: it is a
-    # full Spark job, and holding the module lock across it would
-    # serialize every concurrent fenced operator in the driver.
-    with _lock:
-        before = _persistent_ids(sc)
-        ck = df.localCheckpoint(eager=False)
-        new_ids = _persistent_ids(sc) - before
-    setattr(ck, _FENCE_ATTR, new_ids)
+def fence(df: DataFrame) -> DataFrame:
+    """``df`` behind a lazy localCheckpoint, with its checkpoint RDD
+    recorded for ``release_fence``.  The first job that reads the
+    returned frame materializes it; later jobs read the blocks."""
+    ck = df.localCheckpoint(eager=False)
+    plan = ck._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        raise TypeError(
+            f"fence: localCheckpoint returned a {plan.nodeName()} plan, "
+            f"not a LogicalRDD — no checkpoint RDD to release"
+        )
+    setattr(ck, _FENCE_ATTR, plan.rdd())
     stack = getattr(_scopes, "stack", None)
     if stack:
         stack[-1].append(ck)
-    if eager:
-        ck.count()  # materialize the checkpoint blocks now
     return ck
 
 
@@ -98,25 +79,18 @@ def release_fence(df: DataFrame, blocking: bool = False) -> None:
     afterwards — its truncated lineage cannot recompute, so later jobs
     fail loudly.  Releasing twice (or after context shutdown) is a
     no-op."""
-    ids = getattr(df, _FENCE_ATTR, None)
-    if ids is None:
+    rdd = getattr(df, _FENCE_ATTR, None)
+    if rdd is None:
         raise ValueError(
             "release_fence: frame was not produced by fence() — refusing "
             "to guess which persistent RDDs back it"
         )
-    sc = df.sparkSession.sparkContext
-    try:
-        jmap = sc._jsc.sc().getPersistentRDDs()
-    except Exception:
-        return  # context already stopped — blocks are gone anyway
-    for i in ids:
-        opt = jmap.get(i)
-        if opt.isDefined():
-            opt.get().unpersist(blocking)
+    if not rdd.context().isStopped():  # a stopped context took the blocks
+        rdd.unpersist(blocking)
 
 
 @contextlib.contextmanager
-def fence_scope(blocking: bool = False) -> Iterator[list[DataFrame]]:
+def fence_scope(blocking: bool = False) -> Iterator[None]:
     """Release every fence created in the dynamic extent of the block.
 
         with fence_scope():
@@ -124,16 +98,14 @@ def fence_scope(blocking: bool = False) -> Iterator[list[DataFrame]]:
             result = pairs.collect()
         # band-table checkpoint storage is freed here
 
-    Scopes nest (inner fences release at the inner exit).  The yielded
-    list holds the fenced frames, newest last, for callers that want to
-    release some early via ``release_fence``."""
+    Scopes nest (inner fences release at the inner exit)."""
     stack = getattr(_scopes, "stack", None)
     if stack is None:
         stack = _scopes.stack = []
     frames: list[DataFrame] = []
     stack.append(frames)
     try:
-        yield frames
+        yield
     finally:
         stack.pop()
         for f in frames:

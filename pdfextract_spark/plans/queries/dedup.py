@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ...operators import dedup
-from ...operators.fence import fence as _ckfence
+from ...operators.fence import fence
 from ...sources.tables import load_table
 from ..driver_queries import _NORM_SQL, _spread, q
 
@@ -212,7 +212,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     ).where(F.size(F.split(dedup.normalize_text(F.col("text")), " ")) >= 3)
     # materialize the shingle table once before the self-join
     # (CollapseProject would re-shingle both sides: 0.8 vs 0.44 s)
-    sh = _ckfence(sh)
+    sh = fence(sh)
     a = sh.select(
         F.col("doc_id").alias("a"),
         F.col("lang").alias("lang"),
@@ -300,7 +300,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         )
         .withColumn("n", norm(F.col("v")))
     )
-    e = _ckfence(e)
+    e = fence(e)
     a = e.select(
         F.col("vec_id").alias("a"),
         F.col("label").alias("label_a"),

@@ -25,7 +25,7 @@ snapshot):
   time.  That file is the batch's commit marker: it appears by an
   atomic rename once the batch's output is in place.
 - every file operation (staged writes, moves, deletes, the lineage
-  file and the resume's read of it) goes through one ``pyarrow.fs``
+  file and the reads of it) goes through one ``pyarrow.fs``
   filesystem, resolved once per job from ``out_dir``.
 - ``resume=True`` processes only buckets without a committed lineage
   row; rerunning a partially-failed job is idempotent (a bucket's
@@ -114,29 +114,27 @@ def completed_buckets(
     rows).  Lineage recorded under a different bucketing refuses to
     resume — another ``bucket_hash`` always, another ``n_buckets`` when
     one is given: the old bucket ids would mis-assign rows under the
-    new hash, silently skipping data."""
-    _, fs, root = _filesystem(out_dir)
+    new hash, silently skipping data.  So does lineage with a row
+    missing either pin (committed by a build that predates it): its
+    bucketing cannot be checked."""
+    fs, root = _filesystem(out_dir)
     return _completed(out_dir, fs, root, n_buckets)
 
 
 def _completed(out_dir: str, fs, root: str, n_buckets: int | None) -> set[int]:
     """``completed_buckets`` of ``root`` on ``fs``; ``out_dir`` names
     it in the errors."""
-    import pyarrow.dataset as ds
-    from pyarrow.fs import FileType
-
-    path = f"{root}/{LINEAGE_SUBDIR}"
-    if fs.get_file_info(path).type == FileType.NotFound:
-        return set()
-    # the declared schema: lineage written before a pin reads it as
-    # NULL, which the guards below skip.  Hidden ``.part-*`` and
-    # ``_*`` files are skipped, as Spark's reads skip them
-    table = ds.dataset(
-        path, schema=_lineage_schema(), format="parquet", filesystem=fs
-    ).to_table(columns=["bucket", "n_buckets", "bucket_hash"])
+    table = _read_lineage(fs, root, ["bucket", "n_buckets", "bucket_hash"])
     buckets, pins, hashes = (set(c.to_pylist()) for c in table.columns)
+    if None in pins or None in hashes:
+        raise ValueError(
+            f"lineage at {out_dir} has rows committed without the "
+            f"n_buckets/bucket_hash pins, so the bucketing of its "
+            f"'done' buckets cannot be checked — rerun with "
+            f"resume=False or a fresh out_dir"
+        )
     if n_buckets is not None:
-        bad = [n for n in pins if n is not None and n != n_buckets]
+        bad = [n for n in pins if n != n_buckets]
         if bad:
             raise ValueError(
                 f"lineage at {out_dir} was committed with "
@@ -145,7 +143,7 @@ def _completed(out_dir: str, fs, root: str, n_buckets: int | None) -> set[int]:
                 f"already-'done' bucket ids — rerun with the original "
                 f"bucketing or a fresh out_dir"
             )
-    bad = [h for h in hashes if h is not None and h != BUCKET_HASH]
+    bad = [h for h in hashes if h != BUCKET_HASH]
     if bad:
         raise ValueError(
             f"lineage at {out_dir} was committed with "
@@ -155,6 +153,24 @@ def _completed(out_dir: str, fs, root: str, n_buckets: int | None) -> set[int]:
             f"build or a fresh out_dir"
         )
     return buckets
+
+
+def _read_lineage(fs, root: str, columns: list[str] | None = None):
+    """The committed lineage rows under ``root`` on ``fs``, as a
+    pyarrow Table under the declared schema: no rows if the lineage
+    path is missing, and a column missing from a file reads as NULL.
+    Hidden ``.part-*`` and ``_*`` files are skipped, as Spark's reads
+    skip them; any other read failure, e.g. a corrupt file, raises."""
+    import pyarrow.dataset as ds
+    from pyarrow.fs import FileType
+
+    schema = _lineage_schema()
+    path = f"{root}/{LINEAGE_SUBDIR}"
+    if fs.get_file_info(path).type == FileType.NotFound:
+        return schema.empty_table().select(columns or schema.names)
+    return ds.dataset(
+        path, schema=schema, format="parquet", filesystem=fs
+    ).to_table(columns=columns)
 
 
 def _lineage_schema():
@@ -167,13 +183,12 @@ def _lineage_schema():
 
 
 def _filesystem(out_dir: str):
-    """``(out_dir, fs, root)``: the ``pyarrow.fs`` filesystem every
-    file operation of a job goes through, ``out_dir`` as a URI for
-    Spark and ``root``, the same directory as ``fs`` addresses it.  A
-    path without a scheme becomes an absolute ``file://`` URI, so
-    Spark's reads resolve it to the local files pyarrow wrote, not
-    against ``fs.defaultFS``.  Raises ValueError for a scheme pyarrow
-    cannot open (e.g. Hadoop's ``s3a://``)."""
+    """``(fs, root)``: the ``pyarrow.fs`` filesystem every file
+    operation of a job goes through, and ``out_dir`` as ``fs``
+    addresses it.  A path without a scheme is a local path, made
+    absolute; it is never resolved against Hadoop's ``fs.defaultFS``.
+    Raises ValueError for a scheme pyarrow cannot open (e.g. Hadoop's
+    ``s3a://``)."""
     import os
     from urllib.parse import urlsplit
 
@@ -184,8 +199,7 @@ def _filesystem(out_dir: str):
     if not scheme:
         # not parsed back from the URI, which would need a space or a
         # '%' in the path escaped
-        root = os.path.abspath(out_dir)
-        return "file://" + root, LocalFileSystem(), root
+        return LocalFileSystem(), os.path.abspath(out_dir)
     try:
         fs, root = FileSystem.from_uri(out_dir)
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as exc:
@@ -194,7 +208,7 @@ def _filesystem(out_dir: str):
             f"{scheme!r} ({exc}); use a local path or a URI pyarrow.fs "
             f"opens, e.g. file://, hdfs:// or s3://"
         ) from exc
-    return out_dir, fs, root.rstrip("/")
+    return fs, root.rstrip("/")
 
 
 def _remove(fs, path: str) -> None:
@@ -367,11 +381,11 @@ def run_extraction_job(
     want: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Extract all (remaining) buckets in batches and return the
-    lineage table.
+    lineage table, read on the driver through the job's filesystem.
 
     ``out_dir`` must be a path ``pyarrow.fs`` opens: a local path,
-    which is made an absolute ``file://`` URI (on a cluster, a mount
-    every executor shares), or a URI such as ``hdfs://``, ``s3://``,
+    which is made absolute (on a cluster, a mount every executor
+    shares), or a URI such as ``hdfs://``, ``s3://``,
     ``gs://`` or ``abfs://``.  Any other scheme, e.g. Hadoop's
     ``s3a://``, raises ValueError before a Spark job runs.  Every file
     operation of the job goes through that one filesystem, with
@@ -421,8 +435,9 @@ def run_extraction_job(
     import pyarrow as pa
     from pyarrow.fs import FileSelector
     from pyspark import inheritable_thread_target
+    from pyspark.sql.types import StructType
 
-    out_dir, fs, root = _filesystem(out_dir)
+    fs, root = _filesystem(out_dir)
     lineage_dir = f"{root}/{LINEAGE_SUBDIR}"
     staging_dir = f"{root}/{_STAGING_SUBDIR}"
     # required (NOT NULL) columns stay required in the written footer
@@ -486,10 +501,13 @@ def run_extraction_job(
         f.result()
     _remove(fs, staging_dir)
 
-    # the declared schema, not an inferred one: inference is a Spark
-    # job, and lineage written before a column was added (e.g.
-    # turns_errored, n_buckets) reads that column as NULL
-    return spark.read.schema(LINEAGE_DDL).parquet(f"{out_dir}/{LINEAGE_SUBDIR}")
+    # read through the job's filesystem, as the resume reads it: a
+    # Spark read would need a Hadoop filesystem for out_dir's scheme.
+    # Every column nullable, as Spark reads parquet back
+    return spark.createDataFrame(
+        _read_lineage(fs, root),
+        StructType.fromDDL(LINEAGE_DDL.replace(" NOT NULL", "")),
+    )
 
 
 def salted_conv_partials(result: DataFrame, salt_buckets: int = 16) -> DataFrame:

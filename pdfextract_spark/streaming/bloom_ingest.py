@@ -233,12 +233,12 @@ def bloom_ingest_batch(
         else:
             survivors = first
         # fence: survivors feed BOTH writes (output + new bits) —
-        # without it the probe join re-runs per write; released after
-        # the batch so a long-running ingest never accumulates
-        # checkpoint blocks
+        # without it the probe join re-runs per write.  The first write
+        # materializes it; it is released after the batch so a
+        # long-running ingest never accumulates checkpoint blocks
         from ..operators.fence import fence, release_fence
 
-        survivors = fence(survivors, eager=True)
+        survivors = fence(survivors)
         try:
             survivors.drop("_h").unionByName(nulls).write.mode(
                 "overwrite"

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from pdfextract_spark.operators import dedup
 from pdfextract_spark.operators.fence import (
-    _persistent_ids,
     fence,
     fence_scope,
     release_fence,
@@ -24,7 +23,12 @@ import pytest
 
 
 def _ids(spark):
-    return _persistent_ids(spark.sparkContext)
+    """Ids of the RDDs the JVM holds persisted right now."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next()._1())
+    return ids
 
 
 def test_fence_release_frees_checkpoint_blocks(spark):
@@ -62,11 +66,32 @@ def test_unpersist_alone_is_a_noop_for_checkpoints(spark):
     leaked = _ids(spark) - base
     assert leaked, "if this starts failing, Spark fixed unpersist and " \
         "fence.release_fence can be simplified"
-    # clean up through the working path
-    ck2 = fence(spark.range(10))
-    object.__getattribute__(ck2, "_pdfextract_fence_rdd_ids").update(leaked)
-    release_fence(ck2, blocking=True)
+    # clean up through the working path: the checkpoint RDD named by
+    # the frame's own plan
+    ck._jdf.queryExecution().logical().rdd().unpersist(True)
     assert not (_ids(spark) - base)
+
+
+def test_release_keeps_the_callers_cache(spark):
+    """Checkpointing a frame over a ``.cache()``d frame that is not yet
+    materialized persists the cache's column buffers in the same call.
+    The fence frees only its own checkpoint: the caller's cache stays
+    persisted and still serves reads."""
+    base = _ids(spark)
+    cached = spark.range(1000).select((F.col("id") * 3).alias("x")).cache()
+    try:
+        ck = fence(cached.where("x % 2 = 0"))
+        assert len(_ids(spark) - base) == 2  # checkpoint + cache buffers
+        assert ck.count() == 500
+        release_fence(ck, blocking=True)
+        kept = _ids(spark) - base
+        assert len(kept) == 1, "release_fence freed the caller's cache"
+        assert cached.count() == 1000
+        assert _ids(spark) - base == kept
+    finally:
+        cached.unpersist(True)
+    assert not (_ids(spark) - base)
+
 
 
 def test_fence_scope_releases_operator_storage(spark):
@@ -116,6 +141,35 @@ def test_connected_components_releases_round_storage(spark):
             f"round's labels may remain live"
         )
     assert not (_ids(spark) - base)
+
+
+
+def test_connected_components_runs_one_job_per_round(spark):
+    """Each closure round is one Spark action: the aggregate that counts
+    the round's changed labels also materializes its lazy fence (and in
+    round 1 the symmetrized edges).  Adaptive execution submits every
+    shuffle stage of an action as a job of its own, so the jobs are
+    counted with it off, where one action is one job."""
+    import uuid
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "a bigint, b bigint"
+    )
+    group = f"cc-rounds-{uuid.uuid4().hex}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    stats = {}
+    with fence_scope(blocking=True):
+        sc.setJobGroup(group, "count the jobs of one closure")
+        try:
+            dedup.connected_components(edges, "a", "b", stats=stats)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert stats["rounds"] >= 3
+    assert len(jobs) == stats["rounds"], (len(jobs), stats["rounds"])
 
 
 # --- mega-bucket-safe composed near-dup -------------------------------

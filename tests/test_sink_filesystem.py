@@ -1,7 +1,8 @@
 """The extraction job's file operations go through one ``pyarrow.fs``
 filesystem (``sinks._filesystem``).  ``sinks.py`` therefore reads
 nothing through Hadoop: it imports nothing from ``ioutil``, whose
-store probes use the Hadoop API, and touches no JVM handle."""
+store probes use the Hadoop API, touches no JVM handle and makes no
+Spark read (``spark.read``), which lists its files through Hadoop."""
 
 import ast
 import pathlib
@@ -10,7 +11,10 @@ SINKS = (
     pathlib.Path(__file__).resolve().parent.parent / "pdfextract_spark" / "sinks.py"
 )
 
-_JVM_HANDLES = {"_jvm", "_jsc", "hadoopConfiguration"}
+# JVM handles, and ``read`` as in ``spark.read`` (a file handle's
+# ``.read()`` would be flagged too; sinks.py reads files only through
+# pyarrow)
+_REJECTED = {"_jvm", "_jsc", "hadoopConfiguration", "read"}
 
 
 def _second_filesystem(tree: ast.AST) -> list[int]:
@@ -27,7 +31,7 @@ def _second_filesystem(tree: ast.AST) -> list[int]:
         else:
             continue
         if any(
-            n in _JVM_HANDLES or "ioutil" in n.split(".") for n in names
+            n in _REJECTED or "ioutil" in n.split(".") for n in names
         ):
             lines.append(node.lineno)
     return lines
@@ -46,5 +50,7 @@ def test_detector_flags_ioutil_and_jvm_handles():
         "conf = spark.sparkContext._jsc.hadoopConfiguration()\n"
         "path = sc._jvm.org.apache.hadoop.fs.Path(p)\n"
         "from pyarrow.fs import FileSystem\n"
+        "lineage = spark.read.schema(ddl).parquet(p)\n"
+        "data = fs.open_input_file(p)\n"
     )
-    assert sorted(set(_second_filesystem(ast.parse(src)))) == [1, 2, 3, 4, 5]
+    assert sorted(set(_second_filesystem(ast.parse(src)))) == [1, 2, 3, 4, 5, 7]

@@ -866,8 +866,20 @@ def test_connected_components_min_label(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "a long, b long"
     )
+
+    def persistent():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next()._1())
+        return ids
+
+    base = persistent()
     with _pytest.raises(RuntimeError, match="converge"):
         connected_components(chain, max_iter=2)
+    # the caller gets no frame to release: neither the symmetrized
+    # edges nor the last round's labels may stay persisted
+    assert persistent() - base == set()
 
 
 def test_asof_join_semantics(spark):

@@ -846,10 +846,14 @@ def test_completed_buckets_on_a_scheme_only_pyarrow_opens(spark):
 
 
 def test_resume_from_pre_pin_lineage(spark, tmp_path):
-    """Lineage committed before the n_buckets pin and turns_errored
-    has neither column.  Its buckets count as done, the missing pin
-    reads NULL and passes the guard, and resume extracts only the
-    other buckets, exactly once."""
+    """Lineage committed before the n_buckets and bucket_hash pins has
+    neither column, so its bucketing cannot be checked.  Resuming it
+    under another bucket count used to treat its buckets as done and
+    write the other buckets under the new hash beside them (3,012 rows
+    for 2,000 turns in the 8 -> 16 case); it must refuse, naming the
+    fix, before anything is written.  ``resume=False`` then rebuilds
+    the store."""
+    import glob
     import shutil
 
     from pdfextract_spark.sinks import (
@@ -862,33 +866,33 @@ def test_resume_from_pre_pin_lineage(spark, tmp_path):
     t = make_transcripts(spark)
     out = str(tmp_path / "out")
     run_extraction_job(spark, t, out, n_buckets=8, buckets_per_batch=8)
-    # a pre-pin job that crashed after committing buckets 0-3
+    # the same store as a build before the pins committed it
     lineage_dir = f"{out}/{LINEAGE_SUBDIR}"
-    cols = ["bucket", *(c for c in LINEAGE_COUNTS if c != "turns_errored"),
-            "committed_at"]
+    cols = ["bucket", *LINEAGE_COUNTS, "committed_at"]
     rows = [
-        tuple(r) for r in spark.read.parquet(lineage_dir)
-        .where("bucket < 4").select(*cols).collect()
+        tuple(r) for r in spark.read.parquet(lineage_dir).select(*cols).collect()
     ]
     shutil.rmtree(lineage_dir)
-    for b in range(4, 8):
-        shutil.rmtree(f"{out}/bucket={b}", ignore_errors=True)
     ddl = (
         "bucket int, "
-        + ", ".join(f"{c} bigint" for c in cols[1:-1])
+        + ", ".join(f"{c} bigint" for c in LINEAGE_COUNTS)
         + ", committed_at double"
     )
     spark.createDataFrame(rows, ddl).write.parquet(lineage_dir)
+    files = sorted(glob.glob(f"{out}/**/*.parquet", recursive=True))
 
-    assert completed_buckets(spark, out, 8) == {0, 1, 2, 3}
+    for n in (8, 16, None):
+        with pytest.raises(ValueError, match="resume=False or a fresh out_dir"):
+            completed_buckets(spark, out, n)
+    with pytest.raises(ValueError, match="resume=False or a fresh out_dir"):
+        run_extraction_job(spark, t, out, n_buckets=16, buckets_per_batch=8)
+    assert sorted(glob.glob(f"{out}/**/*.parquet", recursive=True)) == files
+
     lineage = run_extraction_job(
-        spark, t, out, n_buckets=8, buckets_per_batch=8
+        spark, t, out, n_buckets=16, buckets_per_batch=8, resume=False
     ).collect()
-    assert sorted(r["bucket"] for r in lineage) == list(range(8))
-    assert {r["bucket"] for r in lineage if r["n_buckets"] is None} == {
-        0, 1, 2, 3
-    }
-    assert {r["n_buckets"] for r in lineage if r["bucket"] >= 4} == {8}
+    assert sorted(r["bucket"] for r in lineage) == list(range(16))
+    assert {r["n_buckets"] for r in lineage} == {16}
     assert sum(r["rows_out"] for r in lineage) == len(TEXTS)
     assert spark.read.parquet(out).count() == len(TEXTS)
 
@@ -897,8 +901,9 @@ def test_lineage_reads_see_every_committed_row(spark, tmp_path):
     """``_lineage`` is underscore-prefixed so that reads of the output
     skip it; reading it directly makes Spark log "All paths were
     ignored" and still return every row.  The committed rows are read
-    here from the files with pyarrow, so a Spark that starts skipping
-    the hidden path fails this test."""
+    here from the files with pyarrow and compared with the job's
+    returned lineage and with a direct Spark read, so a Spark that
+    starts skipping the hidden path fails this test."""
     import glob
 
     import pyarrow as pa
@@ -941,6 +946,8 @@ def test_lineage_reads_see_every_committed_row(spark, tmp_path):
     want = sorted(zip(*(on_disk.column(c).to_pylist() for c in key)))
     assert len(want) == 8
     assert sorted(tuple(r) for r in lineage.select(*key).collect()) == want
+    by_spark = spark.read.schema(LINEAGE_DDL).parquet(lineage_dir)
+    assert sorted(tuple(r) for r in by_spark.select(*key).collect()) == want
     assert completed_buckets(spark, out, 8) == set(range(8))
     assert "rows_out" not in spark.read.parquet(out).columns
 
@@ -975,13 +982,48 @@ def test_job_refuses_out_dir_pyarrow_cannot_open(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(str(tmp_path / "rel_out")).count() == len(TEXTS)
 
 
+def test_job_returns_lineage_through_its_own_filesystem(
+    spark, tmp_path, monkeypatch
+):
+    """The returned lineage is read through the job's pyarrow
+    filesystem, as the resume reads it.  Here ``out_dir`` is an
+    ``s3://`` URI that the job's filesystem serves from local disk and
+    Hadoop has no filesystem for: a Spark read of the lineage would
+    raise after every batch had committed."""
+    import uuid
+
+    from pyarrow.fs import LocalFileSystem
+
+    from pdfextract_spark import sinks
+
+    root = str(tmp_path / "out")
+    monkeypatch.setattr(
+        sinks, "_filesystem", lambda out_dir: (LocalFileSystem(), root)
+    )
+    sc = spark.sparkContext
+    group = f"s3-lineage-{uuid.uuid4().hex}"
+    t = make_transcripts(spark)
+    lineage = sinks.run_extraction_job(
+        spark, t, "s3://bucket/out", n_buckets=8, buckets_per_batch=4
+    )
+    sc.setJobGroup(group, "read the returned lineage")
+    try:
+        rows = lineage.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r["bucket"] for r in rows) == list(range(8))
+    assert sum(r["rows_out"] for r in rows) == len(TEXTS)
+    assert spark.read.parquet(root).count() == len(TEXTS)
+
+
 def test_job_local_out_dir_ignores_default_fs(spark, tmp_path, monkeypatch):
-    """pyarrow writes a scheme-less ``out_dir`` to local disk, so Spark
-    and the Hadoop probes of the resume must address the same local
-    files, not resolve the bare path against ``fs.defaultFS``.  Here
+    """pyarrow writes a scheme-less ``out_dir`` to local disk, and the
+    resume and the returned lineage read the same local files, never
+    resolving the bare path against ``fs.defaultFS``.  Here
     ``fs.defaultFS`` names a scheme no filesystem serves: any bare-path
     lookup fails, and a resume pass still sees every committed
-    bucket."""
+    bucket.  The returned lineage is driver-side rows: a frame that
+    reads no file."""
     import os
 
     from pdfextract_spark.sinks import run_extraction_job
@@ -995,8 +1037,7 @@ def test_job_local_out_dir_ignores_default_fs(spark, tmp_path, monkeypatch):
         lineage = run_extraction_job(
             spark, t, "out", n_buckets=4, buckets_per_batch=2
         )
-        files = lineage.inputFiles()
-        assert files and all(f.startswith("file:/") for f in files)
+        assert lineage.inputFiles() == []
         assert lineage.count() == 4
         again = run_extraction_job(
             spark, t, "out", n_buckets=4, buckets_per_batch=2

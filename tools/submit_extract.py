@@ -13,8 +13,8 @@ Build the dependency zip and submit:
 On a real cluster ``--master`` changes (YARN/k8s), and ``--output``
 must be a path that ``pyarrow.fs`` opens from the driver and from
 every executor: a shared mount, or an ``hdfs://``, ``s3://``,
-``gs://`` or ``abfs://`` URI.  A local path is handed to Spark as a
-``file://`` URI, not resolved against ``fs.defaultFS``.  Hadoop-only
+``gs://`` or ``abfs://`` URI.  A local path stays local, never
+resolved against ``fs.defaultFS``.  Hadoop-only
 schemes such as ``s3a://`` are refused before any Spark job runs;
 credentials come from pyarrow's own chain, not ``spark.hadoop.*``,
 and ``hdfs://`` needs libhdfs on every executor.  The job is a single narrow
